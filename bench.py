@@ -137,6 +137,25 @@ R01_SET = {
 }
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: $SPARK_GRAFT_MEM when set, else a quarter
+    of ``MemTotal`` capped at half of ``MemAvailable`` (/proc/meminfo), so
+    the default fits the host it runs on; below 1 GiB it refuses to
+    start rather than risk the host."""
+    if os.environ.get("SPARK_GRAFT_MEM"):
+        return os.environ["SPARK_GRAFT_MEM"]
+    mib = {}
+    with open("/proc/meminfo") as f:
+        for line in f:
+            k, v = line.split(":", 1)
+            mib[k] = int(v.split()[0]) // 1024  # kB -> MiB
+    mb = min(mib["MemTotal"] // 4, mib["MemAvailable"] // 2)
+    if mb < 1024:
+        sys.exit(f"driver memory: {mb} MiB (MemTotal/4, MemAvailable/2) "
+                 "is below 1 GiB; free memory or set SPARK_GRAFT_MEM")
+    return f"{mb}m"
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -150,7 +169,7 @@ def main() -> None:
         # kept); production-scale inputs are already multi-file
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # 65+ queries × dozens of generated classes each: the default
         # 240 MB JIT code cache fills mid-session, silently disabling
         # compilation and inflating every later query (the warning is

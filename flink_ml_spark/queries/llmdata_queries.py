@@ -5194,13 +5194,14 @@ CMS_HEAVY_HITTERS_SQL = _cms_heavy_hitters_sql()
 
 
 def llm_prep_pipeline_v15(spark, sf_dir):
-    """Corpus-prep v15 — sketch-gated boilerplate-line removal: a
-    CountMinSketch frequency pass generates boilerplate candidates in
-    bounded state, exact verification trims overestimates, and every
-    verified-frequent line is stripped from every page.  Because CMS
-    never underestimates, the drop set provably equals the exact
-    line-frequency filter — so the oracle is the plain exact-count SQL
-    while the Spark side runs the bounded-state two-pass path."""
+    """Corpus-prep v15 — boilerplate-line removal: every line that
+    appears at least ``minCount`` times across pages is stripped from
+    every page.  ``FrequentLineFilter.fit`` is one exact JVM-side line
+    count (map-side partial aggregation collapses the repeated lines),
+    so the oracle is the same plain exact-count SQL.  A CountMinSketch
+    gate used to run before that count; hashing every line in Python
+    twice cost more than the exact pass it was meant to shrink, and it
+    never changed the drop set, so it was removed."""
     from ..llmdata import FrequentLineFilter
     docs = load(spark, sf_dir, "documents")
     pages = docs.select(
@@ -5208,8 +5209,7 @@ def llm_prep_pipeline_v15(spark, sf_dir):
         F.concat_ws("\n", F.col("text"), F.lit(_BOILER1), F.lit(_BOILER2),
                     F.substring("text", 1, 40)).alias("page"))
     m = FrequentLineFilter(idCol="doc_id", textCol="page",
-                           outputCol="clean", minCount=100,
-                           width=4096, seed=SEED).fit(pages)
+                           outputCol="clean", minCount=100).fit(pages)
     out = m.transform(pages)[0]
     kept = F.split(F.col("clean"), "\n")
     return out.select("doc_id",

@@ -1020,9 +1020,9 @@ def streaming_funnel(spark, sf_dir):
     ``StreamingFunnel`` (applyInPandasWithState, k-long GroupState per
     user, event-time timeout); a far-future sentinel row rides in the
     SECOND batch, advancing the watermark computed at its end, and the
-    engine's standard trailing no-data micro-batch (on by default:
-    ``spark.sql.streaming.noDataMicroBatches.enabled``) is where every
-    user's timeout fires and the final row emits.  (r09 cut the former
+    engine's standard trailing no-data micro-batch (pinned on for the
+    query: ``spark.sql.streaming.noDataMicroBatches.enabled``) is where
+    every user's timeout fires and the final row emits.  (r09 cut the former
     separate first sentinel batch; r10 cuts the trailing sentinel-only
     FILE batch — it only re-advanced a watermark already past every
     user's timeout, which the no-data batch the engine appends anyway
@@ -1051,6 +1051,11 @@ def streaming_funnel(spark, sf_dir):
     q = None
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # every timeout fires in the trailing no-data micro-batch: pin it, so
+    # a session that turned it off cannot silently get an empty result
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev_no_data = spark.conf.get(no_data)
+    spark.conf.set(no_data, "true")
     try:
         os.mkdir(os.path.join(tmp, "in"))
         parts = [data.where(F.col("ts_ms") <= mid),
@@ -1081,6 +1086,7 @@ def streaming_funnel(spark, sf_dir):
                           .alias("stages_completed"))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set(no_data, prev_no_data)
         if q is not None and q.isActive:
             q.stop()
         shutil.rmtree(tmp, ignore_errors=True)

@@ -145,8 +145,8 @@ def test_frequent_line_filter_drops_verified_boilerplate(spark, tmp_path):
     rows = [(i, f"unique body {i}\nCOOKIE BANNER\nNAV FOOTER")
             for i in range(20)] + [(100, "no banner here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    m = FrequentLineFilter(idCol="doc_id", textCol="text", minCount=10,
-                           width=64).fit(df)
+    m = FrequentLineFilter(idCol="doc_id", textCol="text",
+                           minCount=10).fit(df)
     assert m.model_data["boilerplate"] == ["COOKIE BANNER", "NAV FOOTER"]
     got = {r["doc_id"]: r["clean"] for r in m.transform(df)[0].collect()}
     assert got[3] == "unique body 3"
@@ -161,17 +161,54 @@ def test_frequent_line_filter_drops_verified_boilerplate(spark, tmp_path):
 
 
 def test_frequent_line_filter_equals_exact_filter(spark):
-    """The sketch pass must not change the result: drop set == exact
-    line-frequency filter even with a tiny (collision-heavy) sketch."""
+    """The drop set is exactly the line-frequency filter, on a corpus
+    whose unique-line long tail dwarfs the frequent lines, with lines
+    just below and just at the threshold."""
     from flink_ml_spark.llmdata import FrequentLineFilter
-    rows = [(i, f"body {i % 37}\nBANNER") for i in range(60)]
+    rows = [(i, f"body {i % 37}\nBANNER\ntail {i}\nother tail {i}"
+             + ("\nNEAR" if i < 29 else "") + ("\nEDGE" if i < 30 else ""))
+            for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    tiny = FrequentLineFilter(idCol="doc_id", textCol="text", minCount=30,
-                              width=4, depth=2).fit(df)  # heavy collisions
+    m = FrequentLineFilter(idCol="doc_id", textCol="text",
+                           minCount=30).fit(df)
     exact = {r["ln"] for r in
              df.selectExpr("explode(split(text, '\\n')) AS ln")
              .groupBy("ln").count().filter("count >= 30").collect()}
-    assert set(tiny.model_data["boilerplate"]) == exact
+    assert set(m.model_data["boilerplate"]) == exact
+    assert exact == {"BANNER", "EDGE"}
+
+
+def test_frequent_line_filter_fit_runs_no_python_udf(spark):
+    """fit is one JVM-side pass: no query it runs holds a Python UDF
+    (the former sketch gate hashed every line in an Arrow UDF, twice)."""
+    from flink_ml_spark.llmdata import FrequentLineFilter
+    rows = [(i, f"unique {i}\nBANNER") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sc = spark.sparkContext
+    group = "flf-fit-no-python-udf"
+    sc.setJobGroup(group, "FrequentLineFilter.fit")
+    try:
+        m = FrequentLineFilter(idCol="doc_id", textCol="text",
+                               minCount=10).fit(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert m.model_data["boilerplate"] == ["BANNER"]
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 50), 50)  # the latest ones
+    plans = []
+    for k in range(execs.size()):
+        e = execs.apply(k)
+        ids = e.jobs().keySet()
+        if any(ids.contains(j) for j in jobs):
+            plans.append(e.physicalPlanDescription())
+    assert plans
+    for plan in plans:
+        assert "EvalPython" not in plan and "PythonUDF" not in plan, plan
 
 
 def test_frequent_line_filter_broadcast_path_matches_literal(spark):
@@ -184,8 +221,8 @@ def test_frequent_line_filter_broadcast_path_matches_literal(spark):
     rows = [(i, f"keep {i}\nBANNER A\nBANNER B\nkeep tail {i}")
             for i in range(30)] + [(99, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    m = FrequentLineFilter(idCol="doc_id", textCol="text", minCount=10,
-                           width=64).fit(df)
+    m = FrequentLineFilter(idCol="doc_id", textCol="text",
+                           minCount=10).fit(df)
     lit = {r["doc_id"]: r["clean"] for r in m.transform(df)[0].collect()}
     saved = sk._LINE_SET_LITERAL_LIMIT
     try:
@@ -199,6 +236,32 @@ def test_frequent_line_filter_broadcast_path_matches_literal(spark):
         sk._LINE_SET_LITERAL_LIMIT = saved
     assert got == lit
     assert got[99] is None  # null text stays null on both paths
+
+
+def test_frequent_line_filter_broadcast_path_follows_model_data(spark):
+    """The broadcast-set path must filter with the model's CURRENT drop
+    set: swapping model_data on the same instance may not reuse the
+    broadcast cached for the old set."""
+    from flink_ml_spark.llmdata import FrequentLineFilter
+    from flink_ml_spark.llmdata import sketches as sk
+    rows = [(i, f"keep {i}\nBANNER A\nBANNER B") for i in range(12)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    m = FrequentLineFilter(idCol="doc_id", textCol="text",
+                           minCount=10).fit(df)
+    saved = sk._LINE_SET_LITERAL_LIMIT
+    try:
+        sk._LINE_SET_LITERAL_LIMIT = 1  # force the broadcast-set path
+        first = {r["doc_id"]: r["clean"]
+                 for r in m.transform(df)[0].collect()}
+        m.model_data = {"boilerplate": ["BANNER A", "keep 3"],
+                        "minCount": 10}
+        second = {r["doc_id"]: r["clean"]
+                  for r in m.transform(df)[0].collect()}
+    finally:
+        sk._LINE_SET_LITERAL_LIMIT = saved
+    assert first[3] == "keep 3"
+    assert second[3] == "BANNER B"
+    assert second[4] == "keep 4\nBANNER B"
 
 
 def test_cms_join_path_null_key_estimate_is_null(spark, zipf_df):

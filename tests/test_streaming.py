@@ -580,3 +580,19 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
                           r["stages_completed"])
            for r in batch.collect()}
     assert got == exp
+
+
+def test_streaming_funnel_query_pins_no_data_batches(spark, sf_dir):
+    """The funnel's timeouts fire only in the trailing no-data
+    micro-batch: a session that turned those batches off must still get
+    the full result, and get its own setting back afterwards."""
+    from flink_ml_spark.queries.streaming_queries import streaming_funnel
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        n = streaming_funnel(spark, sf_dir).count()
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+    assert n > 0

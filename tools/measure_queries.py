@@ -36,6 +36,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+
+    from bench import driver_memory
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -45,7 +47,7 @@ def main() -> None:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
         .config("spark.sql.session.timeZone", "UTC")
