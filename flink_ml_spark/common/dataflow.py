@@ -17,10 +17,18 @@ reference design docs.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable, Sequence
+from contextlib import contextmanager
+from functools import reduce
+from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
+
+# rows per range partition of ``ordered_prefix_sums``; module-level so
+# tests can shrink it to exercise the multi-partition offsets path
+ROWS_PER_PART = 65536
 
 
 def map_partition(df: DataFrame, func: Callable, schema) -> DataFrame:
@@ -174,6 +182,108 @@ def with_contiguous_id(df: DataFrame, out_col: str = "__seq__") -> DataFrame:
     return (d.join(F.broadcast(odf), "__pid__")
             .withColumn(out_col, F.row_number().over(w) + F.col("__off__"))
             .drop("__pid__", "__off__"))
+
+
+def _running_sums(batches: Iterator[pd.DataFrame], by: Sequence[str],
+                  sums: Sequence[str], outs: Sequence[str]):
+    """Inclusive running sums of ``sums`` over one partition's rows, which
+    arrive sorted by ``(*by, *order)``: the sums restart wherever the
+    ``by`` key changes (null-safe) and carry across Arrow batches.  Each
+    run is a plain ``Series.cumsum`` plus the carried total, so with
+    ``by=()`` a batch's values are bit-identical to ``cumsum() + carry``.
+    """
+    key: list = [None] * len(by)
+    carry = {c: 0 for c in sums}
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        # same[i]: row i continues the run of the row before it (row 0:
+        # of the previous batch's last row)
+        same = np.ones(len(pdf), dtype=bool)
+        for j, c in enumerate(by):
+            x = pdf[c].to_numpy(dtype=object)
+            prev = np.empty(len(x), dtype=object)
+            prev[0], prev[1:] = key[j], x[:-1]
+            same &= (x == prev) | (pd.isna(x) & pd.isna(prev))
+        cuts = [0, *np.flatnonzero(~same[1:]) + 1, len(pdf)]
+        for c, o in zip(sums, outs):
+            runs = [pdf[c].iloc[a:b].cumsum() for a, b in zip(cuts, cuts[1:])]
+            if same[0]:
+                runs[0] = runs[0] + carry[c]
+            pdf[o] = pd.concat(runs)
+            carry[c] = pdf[o].iloc[-1]
+        key = [pdf[c].iloc[-1] for c in by]
+        yield pdf
+
+
+@contextmanager
+def ordered_prefix_sums(df: DataFrame, order: Sequence[Column],
+                        sums: Sequence[str], n_rows: int,
+                        by: Sequence[str] = ()) -> Iterator[DataFrame]:
+    """Exact running totals over a global order, with no single-task sort.
+
+    Yields ``df`` plus one ``cum_<c>`` column per name in ``sums``: the
+    inclusive sum of ``c`` over every row at or before this one in the
+    order ``order`` within the same ``by`` group (null-safe; ``by=()``
+    is one global group).  This is the reference's exact-ranking
+    geometry (BinaryClassificationEvaluator.java:376-450): range-
+    partition on ``(*by, *order)`` into ``n_rows // ROWS_PER_PART + 1``
+    partitions (at most ``spark.sql.shuffle.partitions``), sort each,
+    run an Arrow cumsum per partition, then add per-``(partition,
+    *by)`` prefix offsets — the partial-summary merge: the per-
+    ``(partition, group)`` totals (at most groups + partitions − 1 rows,
+    since ranges are contiguous) come to the driver, and the at most
+    ``partitions − 1`` nonzero offsets return as a broadcast join.
+    With one partition there are no offsets and no extra job.
+
+    ``n_rows`` is the row count of ``df``, from a count the caller
+    already runs.  The range-partitioned relation is persisted so the
+    partition ids agree between the offsets and the cumsum passes; the
+    context unpersists it on exit, so callers finish every action on
+    the yielded frame inside the block (``localCheckpoint`` a lazy
+    result).
+    """
+    spark = df.sparkSession
+    npart = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions",
+                                          "32")),
+                       n_rows // ROWS_PER_PART + 1))
+    keys = [F.col(c).asc() for c in by] + list(order)
+    part = (df.repartitionByRange(npart, *keys).sortWithinPartitions(*keys)
+            .withColumn("__pid__", F.spark_partition_id()).persist())
+    try:
+        outs = [f"cum_{c}" for c in sums]
+        schema = T.StructType(part.schema.fields + [
+            T.StructField(o, part.schema[c].dataType)
+            for c, o in zip(sums, outs)])
+        local = part.mapInPandas(
+            lambda it: _running_sums(it, by, sums, outs), schema)
+        if npart > 1:
+            # ranges are contiguous, so a group continues from an earlier
+            # partition only as that partition's first group: its offset
+            # is the group's total over the earlier partitions
+            tots = part.groupBy("__pid__", *by).agg(
+                *[F.sum(c).alias(c) for c in sums])
+            acc, offs, nan = {}, [], object()
+            for r in sorted(tots.collect(), key=lambda r: r["__pid__"]):
+                # NaN is one group in Spark but never equal in Python
+                key = tuple(nan if v != v else v for v in r[1:1 + len(by)])
+                if key in acc:
+                    offs.append((*r[:1 + len(by)], *acc[key]))
+                acc[key] = [a + r[c] for a, c in
+                            zip(acc.get(key, [0] * len(sums)), sums)]
+            odf = spark.createDataFrame(offs, tots.schema).toDF(
+                *[f"__o{c}" for c in tots.columns])
+            on = reduce(lambda x, y: x & y,
+                        [F.col(c).eqNullSafe(F.col(f"__o{c}")) for c in by],
+                        F.col("__pid__") == F.col("__o__pid__"))
+            local = (local.join(F.broadcast(odf), on, "left")
+                     .withColumns({o: F.col(o) + F.coalesce(
+                         F.col(f"__o{c}"), F.lit(0))
+                         for c, o in zip(sums, outs)})
+                     .drop(*odf.columns))
+        yield local.drop("__pid__")
+    finally:
+        part.unpersist()
 
 
 def generate_batch_data(df: DataFrame, batch_size: int) -> Iterable[DataFrame]:

@@ -9,14 +9,12 @@ Spark-first exact plan with the same geometry:
 
 1. ``groupBy(score)`` → one row per distinct score with (pos, neg) weight
    sums (map-side combine; ties collapse here).
-2. ``repartitionByRange(desc(score))`` — Spark samples boundaries exactly
-   like the reference's ``getBoundaryRangeOfPartitions`` — then a
-   per-partition descending sort + running cumsum (Arrow ``mapInPandas``;
-   linear, no global single-task sort).
-3. Per-partition (pos, neg) totals are tiny (2 doubles × numPartitions);
-   they come to the driver once and go back as a broadcast prefix-offset
-   join, turning local cumsums into global ones — the reference's
-   partial-summary merge (:430-450).
+2. ``dataflow.ordered_prefix_sums`` over ``desc(score)`` turns them into
+   global descending cumulatives: Spark samples range boundaries exactly
+   like the reference's ``getBoundaryRangeOfPartitions``, each partition
+   runs a linear Arrow cumsum (no global single-task sort), and the
+   per-partition totals return as broadcast prefix offsets — the
+   reference's partial-summary merge (:430-450).
 
 Closed-form tie-aware metrics over the global cumulative columns
 (cpd/cnd = positives/negatives at-or-above the score):
@@ -35,32 +33,11 @@ Weighted variants via ``weightCol``.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import AlgoOperator
+from ..common.dataflow import ordered_prefix_sums
 from ..param import HasLabelCol, HasRawPredictionCol, HasWeightCol
-
-
-def _local_cumsum(batches):
-    """Running (pos, neg) cumsum across the Arrow batches of one partition.
-
-    Rows arrive sorted by score descending (sortWithinPartitions upstream),
-    so the running totals are the partition-local descending cumulatives.
-    """
-    cp = 0.0
-    cn = 0.0
-    for pdf in batches:
-        lcp = pdf["pos"].cumsum() + cp
-        lcn = pdf["neg"].cumsum() + cn
-        if len(pdf):
-            cp = float(lcp.iloc[-1])
-            cn = float(lcn.iloc[-1])
-        yield pd.DataFrame({
-            "pid": pdf["pid"], "pos": pdf["pos"], "neg": pdf["neg"],
-            "lcp": lcp, "lcn": lcn,
-        })
 
 
 class BinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
@@ -100,71 +77,39 @@ class BinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
                     [(float("nan"),) * 4],
                     "areaUnderROC double, areaUnderPR double, ks double, areaUnderLorenz double")
                 return [out]
-            npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            # size the range partitioning to the observed distinct-score
-            # count (~64k rows/partition target, AQE-style): tie collapse
-            # often shrinks the relation by orders of magnitude, and a
-            # 1-partition cumsum over a tiny relation beats 32 near-empty
-            # Arrow workers
-            npart = max(1, min(npart, int(tot["m"]) // 65536 + 1))
-            # Range partition on descending score (sampled boundaries, like
-            # the reference), then per-partition sort + linear cumsum.
-            part = (grouped.repartitionByRange(npart, F.col("score").desc())
-                    .sortWithinPartitions(F.col("score").desc())
-                    .withColumn("pid", F.spark_partition_id())
-                    .persist())
-            if npart == 1:
-                offs = [(0, 0.0, 0.0)]
-            else:
-                ptot = sorted(part.groupBy("pid")
-                              .agg(F.sum("pos").alias("p"), F.sum("neg").alias("n"))
-                              .collect(), key=lambda r: r["pid"])
-                # prefix offsets: everything in partitions of higher score
-                offs, op, on = [], 0.0, 0.0
-                for r in ptot:
-                    offs.append((int(r["pid"]), op, on))
-                    op += float(r["p"])
-                    on += float(r["n"])
-            odf = spark.createDataFrame(offs, "pid int, off_p double, off_n double")
-            local = part.mapInPandas(
-                _local_cumsum,
-                "pid int, pos double, neg double, lcp double, lcn double")
-            cum = (local.join(F.broadcast(odf), "pid")
-                   .select("pos", "neg",
-                           (F.col("lcp") + F.col("off_p")).alias("cpd"),
-                           (F.col("lcn") + F.col("off_n")).alias("cnd")))
-            # kept for tests/debugging: the cumulative stage's physical plan
-            # must show a range-partitioned exchange, never a global Window
-            self.last_plan_ = cum._jdf.queryExecution().toString()
-            prev_pos = F.col("cpd") - F.col("pos")
-            prev_tot = prev_pos + F.col("cnd") - F.col("neg")
-            agg = cum.agg(
-                # tie-aware Mann-Whitney: each positive-group counts negatives
-                # strictly below (= N - cnd) + half of same-score negatives
-                F.sum(F.col("pos") * ((N - F.col("cnd")) + F.col("neg") / 2)).alias("u"),
-                F.max(F.abs(F.col("cpd") / P - F.col("cnd") / N)).alias("ks"),
-                # AUPRC: trapezoid between consecutive distinct-score points of
-                # (recall = cpd/P, precision = cpd/(cpd+cnd)); previous
-                # precision for the first point is 1.0 (reference :289-295)
-                F.sum(
-                    (F.col("pos") / P) *
-                    ((F.col("cpd") / (F.col("cpd") + F.col("cnd"))) +
-                     F.when(prev_tot == 0.0, F.lit(1.0))
-                     .otherwise(prev_pos / prev_tot)) / 2
-                ).alias("auprc"),
-                # Lorenz gain curve, descending: x = cum fraction of samples
-                # (positiveRate), y = cum fraction of positives (tpr)
-                F.sum(
-                    ((F.col("pos") + F.col("neg")) / (P + N)) *
-                    ((F.col("cpd") - F.col("pos")) + F.col("cpd")) / P / 2
-                ).alias("lorenz"),
-            ).collect()[0]
+            with ordered_prefix_sums(grouped, [F.col("score").desc()],
+                                     ["pos", "neg"], int(tot["m"])) as ranked:
+                cum = ranked.withColumnsRenamed({"cum_pos": "cpd",
+                                                 "cum_neg": "cnd"})
+                # kept for tests/debugging: the cumulative stage's physical
+                # plan must show a range-partitioned exchange, never a
+                # global Window
+                self.last_plan_ = cum._jdf.queryExecution().toString()
+                prev_pos = F.col("cpd") - F.col("pos")
+                prev_tot = prev_pos + F.col("cnd") - F.col("neg")
+                agg = cum.agg(
+                    # tie-aware Mann-Whitney: each positive-group counts negatives
+                    # strictly below (= N - cnd) + half of same-score negatives
+                    F.sum(F.col("pos") * ((N - F.col("cnd")) + F.col("neg") / 2)).alias("u"),
+                    F.max(F.abs(F.col("cpd") / P - F.col("cnd") / N)).alias("ks"),
+                    # AUPRC: trapezoid between consecutive distinct-score points of
+                    # (recall = cpd/P, precision = cpd/(cpd+cnd)); previous
+                    # precision for the first point is 1.0 (reference :289-295)
+                    F.sum(
+                        (F.col("pos") / P) *
+                        ((F.col("cpd") / (F.col("cpd") + F.col("cnd"))) +
+                         F.when(prev_tot == 0.0, F.lit(1.0))
+                         .otherwise(prev_pos / prev_tot)) / 2
+                    ).alias("auprc"),
+                    # Lorenz gain curve, descending: x = cum fraction of samples
+                    # (positiveRate), y = cum fraction of positives (tpr)
+                    F.sum(
+                        ((F.col("pos") + F.col("neg")) / (P + N)) *
+                        ((F.col("cpd") - F.col("pos")) + F.col("cpd")) / P / 2
+                    ).alias("lorenz"),
+                ).collect()[0]
         finally:
             grouped.unpersist()
-            try:
-                part.unpersist()
-            except NameError:  # early exit before `part` exists (P/N == 0)
-                pass
         auc = float(agg["u"]) / (P * N)
         out = spark.createDataFrame(
             [(auc, float(agg["auprc"]), float(agg["ks"]), float(agg["lorenz"]))],

@@ -9,18 +9,14 @@ AUC in one pass from the Mann–Whitney midrank identity:
     AUC_g = (Σ_{pos∈g} midrank(score) − P_g(P_g+1)/2) / (P_g·N_g)
 
 Plan: ``groupBy(group, score)`` collapses ties (map-side combine), then
-per-group midranks over the distinct scores come from a COMPOSITE-KEY
-``(group, score)`` range-partitioned cumsum (the exact-KS / Spearman
-``_midranks`` geometry): each partition holds a contiguous
-``(group, score)`` range, an Arrow pass computes within-partition
-cumulative counts that RESET at group boundaries, and per-(partition,
-group) prefix offsets — a relation of at most ``n_groups + n_partitions
-− 1`` rows, since ranges are contiguous — add up via a tiny window.  A
-single dominant slice therefore spreads across ALL partitions instead
-of degrading to one distinct-score-sized task (the r05 per-group
-``Window.partitionBy`` did exactly that).  Doubled midranks are
-integers, so the rank sums are exact (the Spearman determinism
-discipline).
+per-group midranks over the distinct scores come from
+``dataflow.ordered_prefix_sums`` keyed ``by=[group]``: one composite
+``(group, score)`` range partitioning whose cumulative counts restart at
+group boundaries.  A single dominant slice therefore spreads across ALL
+partitions instead of degrading to one distinct-score-sized task (the
+r05 per-group ``Window.partitionBy`` did exactly that).  Doubled
+midranks are integers, so the rank sums are exact (the Spearman
+determinism discipline).
 
 ``transform(df)`` → one row per group:
 ``(group, n, n_pos, auc)``; groups with no positives or no negatives
@@ -29,17 +25,11 @@ yield NaN auc (undefined), not an error.
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..api import AlgoOperator
+from ..common.dataflow import ordered_prefix_sums
 from ..param import HasLabelCol, HasRawPredictionCol, StringParam
-
-# distinct (group, score) rows per range partition; module-level so
-# tests can shrink it to exercise the multi-partition offsets path
-_ROWS_PER_PART = 65536
 
 
 class SlicedBinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
@@ -48,7 +38,6 @@ class SlicedBinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
 
     def transform(self, *inputs: DataFrame) -> list[DataFrame]:
         (df,) = inputs
-        spark = df.sparkSession
         gcol = self.get_("groupCol")
         score = F.col(self.get_("rawPredictionCol")).cast("double")
         y = F.col(self.get_("labelCol")).cast("double")
@@ -58,87 +47,29 @@ class SlicedBinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
              .agg(F.sum("p").alias("pos"), F.count("*").alias("tot"))
              .persist())
         try:
-            m = g.count()
-            npart = int(spark.conf.get("spark.sql.shuffle.partitions",
-                                       "32"))
-            npart = max(1, min(npart, m // _ROWS_PER_PART + 1))
-            # persisted: pid must be IDENTICAL in the cumsum pass and
-            # the offsets pass (range-boundary sampling is not
-            # guaranteed deterministic across re-executions)
-            part = (g.repartitionByRange(npart, F.col("g").asc(),
-                                         F.col("s").asc())
-                    .sortWithinPartitions(F.col("g").asc(),
-                                          F.col("s").asc())
-                    .withColumn("pid", F.spark_partition_id()).persist())
-
-            out_schema = T.StructType(
-                [f for f in g.schema.fields]
-                + [T.StructField("pid", T.IntegerType()),
-                   T.StructField("lc", T.LongType())])
-
-            def cum(batches):
-                # within-partition cumulative tot, resetting per group;
-                # carry spans Arrow batches (rows arrive (g, s)-sorted)
-                carry_g, carry, seen = None, 0, False
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    lc = pdf.groupby("g", sort=False,
-                                     dropna=False)["tot"].cumsum()
-                    if seen:
-                        if pd.isna(carry_g):
-                            mask = pdf["g"].isna()
-                        else:
-                            mask = pdf["g"] == carry_g
-                        lc = lc + mask.astype("int64") * carry
-                    last = pdf["g"].iloc[-1]
-                    same = (pdf["g"].isna() if pd.isna(last)
-                            else pdf["g"] == last)
-                    carry_g, seen = last, True
-                    carry = int(lc[same].iloc[-1])
-                    out = pdf.copy()
-                    out["lc"] = lc
-                    yield out
-
-            local = part.mapInPandas(cum, out_schema)
-            # prefix offsets per (pid, group): contiguous ranges keep
-            # this relation to ≤ n_groups + n_partitions − 1 rows; the
-            # window runs per group over ≤ n_partitions rows
-            otot = part.groupBy("pid", "g").agg(F.sum("tot").alias("t"))
-            woff = (Window.partitionBy("g").orderBy("pid")
-                    .rowsBetween(Window.unboundedPreceding, -1))
-            offs = otot.select(
-                "pid", "g",
-                F.coalesce(F.sum("t").over(woff), F.lit(0)).alias("off"))
-            cum_incl = F.col("lc") + F.col("off")
-            # doubled midrank stays integral: 2·(cnt_less + (ties+1)/2)
-            mid2 = 2 * (cum_incl - F.col("tot")) + F.col("tot") + 1
-            # null-safe on g: a NULL slice is a slice like any other
-            ranked = (local.join(
-                offs.withColumnRenamed("g", "__og__")
-                    .withColumnRenamed("pid", "__opid__"),
-                (F.col("pid") == F.col("__opid__"))
-                & F.col("g").eqNullSafe(F.col("__og__")))
-                .drop("__og__", "__opid__").withColumn("m2", mid2))
-            dx = F.col("pos").cast("decimal(19,0)")
-            agg = (ranked.groupBy("g")
-                   .agg(F.sum("pos").alias("P"),
-                        F.sum(F.col("tot") - F.col("pos")).alias("N"),
-                        F.sum((dx * F.col("m2").cast("decimal(19,0)"))
-                              .cast("decimal(38,0)")).alias("r2sum")))
-            P = F.col("P").cast("double")
-            N = F.col("N").cast("double")
-            auc = ((F.col("r2sum").cast("double") / 2.0
-                    - P * (P + 1) / 2.0) / (P * N))
-            out = agg.select(
-                F.col("g").alias(gcol),
-                (F.col("P") + F.col("N")).alias("n"),
-                F.col("P").alias("n_pos"),
-                F.when((F.col("P") > 0) & (F.col("N") > 0), auc)
-                 .otherwise(F.lit(float("nan"))).alias("auc"))
-            # group-count-sized result; materialize before unpersisting
-            out = out.localCheckpoint(eager=True)
-            part.unpersist()
-            return [out]
+            with ordered_prefix_sums(g, [F.col("s").asc()], ["tot"],
+                                     g.count(), by=["g"]) as cum:
+                # doubled midrank stays integral: 2·(cnt_less + (ties+1)/2)
+                ranked = cum.withColumn(
+                    "m2", 2 * (F.col("cum_tot") - F.col("tot"))
+                    + F.col("tot") + 1)
+                dx = F.col("pos").cast("decimal(19,0)")
+                agg = (ranked.groupBy("g")
+                       .agg(F.sum("pos").alias("P"),
+                            F.sum(F.col("tot") - F.col("pos")).alias("N"),
+                            F.sum((dx * F.col("m2").cast("decimal(19,0)"))
+                                  .cast("decimal(38,0)")).alias("r2sum")))
+                P = F.col("P").cast("double")
+                N = F.col("N").cast("double")
+                auc = ((F.col("r2sum").cast("double") / 2.0
+                        - P * (P + 1) / 2.0) / (P * N))
+                out = agg.select(
+                    F.col("g").alias(gcol),
+                    (F.col("P") + F.col("N")).alias("n"),
+                    F.col("P").alias("n_pos"),
+                    F.when((F.col("P") > 0) & (F.col("N") > 0), auc)
+                     .otherwise(F.lit(float("nan"))).alias("auc"))
+                # group-count-sized result; materialize before unpersisting
+                return [out.localCheckpoint(eager=True)]
         finally:
             g.unpersist()

@@ -92,7 +92,7 @@ class VectorIndexerModel(Model, HasInputCol, HasOutputCol, HasHandleInvalid):
             pairs = []
             for i, v in enumerate(vals):
                 pairs.extend([F.lit(v), F.lit(float(i))])
-            raw = F.create_map(*pairs).getItem(x)
+            raw = F.create_map(*pairs)[x]
             if mode == "keep":
                 expr = F.coalesce(raw, F.lit(float(len(vals))))
             elif mode == "skip":

@@ -93,7 +93,7 @@ class StringIndexerModel(Model, HasInputCols, HasOutputCols, HasHandleInvalid):
             for i, v in enumerate(vocab):
                 pairs.extend([F.lit(v), F.lit(float(i))])
             lookup = F.create_map(*pairs) if pairs else F.create_map()
-            raw = lookup.getItem(F.col(c).cast("string"))
+            raw = lookup[F.col(c).cast("string")]
             if mode == "keep":
                 expr = F.coalesce(raw, F.lit(float(len(vocab))))
             elif mode == "skip":

@@ -39,16 +39,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..api import AlgoOperator, Transformer
+from ..common import dataflow
 from ..param import (BoolParam, HasInputCol, IntParam, Param,
                      ParamValidators, StringArrayParam, StringParam)
 
 _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
-
-# KeySkewProfiler: key relations at or under this size take the ordered-
-# collect driver path (they would occupy one range partition anyway);
-# above it, the range-partitioned distributed cumsum runs.  Module-level
-# so tests can force the distributed path on small data.
-_SKEW_LOCAL_MAX = 65536
 
 _PROFILE_SCHEMA = T.StructType([
     T.StructField("group", T.StringType()),
@@ -770,10 +765,12 @@ class KeySkewProfiler(Transformer, HasInputCol):
     AQE skew join BEFORE it runs at 100 TB, not after.
 
     Plan: ONE ``groupBy(key)`` count (map-side combine) collapses the
-    corpus to the distinct-key relation; the rank/cumulative window and
-    the Gini aggregation run over THAT — cardinality-sized, the same
-    contract as the MI/frequent-items analyzers (an id-like key column
-    is the caller's bug, and ``maxKeys`` fails fast on it).
+    corpus to the distinct-key relation; the ranks, cumulative counts
+    (one ordered collect, or ``dataflow.ordered_prefix_sums`` once the
+    keys outgrow one range partition) and the Gini aggregation run over
+    THAT — cardinality-sized, the same contract as the MI/frequent-items
+    analyzers (an id-like key column is the caller's bug, and
+    ``maxKeys`` fails fast on it).
 
     Gini over per-key counts x₁…x_m sorted ascending:
       G = 2·Σᵢ i·xᵢ / (m·Σx) − (m+1)/m      (i = 1-based ascending rank)
@@ -790,34 +787,32 @@ class KeySkewProfiler(Transformer, HasInputCol):
                     lambda v: int(v) > 0)
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
         key = self.get_("inputCol")
         spark = df.sparkSession
         counts = (df.groupBy(F.col(key).alias("key"))
                   .agg(F.count("*").alias("cnt"))
                   .localCheckpoint(eager=True))
         m = counts.count()
+        schema = ("key string, cnt long, share double, rank long, "
+                  "cum_share double, gini double, top1_share double, "
+                  "topk_share double")
         if m == 0:
-            return spark.createDataFrame(
-                [], "key string, cnt long, share double, rank long, "
-                    "cum_share double, gini double, top1_share double, "
-                    "topk_share double")
+            return spark.createDataFrame([], schema)
         if m > int(self.get_("maxKeys")):
             raise ValueError(
                 f"KeySkewProfiler saw {m} distinct keys in '{key}' "
                 f"(> maxKeys={self.get_('maxKeys')}); is this an id column?")
-        if m <= _SKEW_LOCAL_MAX:
-            # model-sized key relation (it would occupy ONE range
-            # partition below anyway — npart = m // 65536 + 1): one
-            # ordered collect of the checkpointed counts replaces the
-            # range-partition / per-partition-cumsum / offset-broadcast
-            # machinery (~4 scheduler round-trips → 1; r10, guide §1.2).
-            # The sort runs in Spark (same ascending (cnt, key desc)
-            # order, so null/type ordering is the engine's), cumsums and
-            # top-k sums are exact integers, and iw accumulates doubles
-            # sequentially in the same ascending order as the former
-            # single-partition sum — outputs are bit-identical.
-            k = int(self.get_("topK"))
+        k = int(self.get_("topK"))
+        if m < dataflow.ROWS_PER_PART:
+            # the key relation fits ONE range partition of
+            # dataflow.ordered_prefix_sums: one ordered collect of the
+            # checkpointed counts replaces its range-partition / Arrow
+            # cumsum machinery (~4 scheduler round-trips → 1, r10).  The
+            # sort runs in Spark (same ascending (cnt, key desc) order,
+            # so null/type ordering is the engine's), cumsums and top-k
+            # sums are exact integers, and iw accumulates doubles
+            # sequentially in the same ascending order as the single-
+            # partition sum — outputs are bit-identical.
             rows = (counts.orderBy(F.col("cnt").asc(), F.col("key").desc())
                     .select(F.col("key").cast("string").alias("key"), "cnt")
                     .collect())
@@ -835,77 +830,40 @@ class KeySkewProfiler(Transformer, HasInputCol):
                 out.append((r["key"], int(r["cnt"]), r["cnt"] / n,
                             m - i, (ntot - ca + r["cnt"]) / n,
                             float(gini), float(t1) / n, float(tk) / n))
-            return spark.createDataFrame(
-                out, "key string, cnt long, share double, rank long, "
-                     "cum_share double, gini double, top1_share double, "
-                     "topk_share double")
-        # ascending range-partitioned cumsum (the exact-KS geometry — no
-        # single-task global Window even at 10M distinct keys): ascending
-        # index i and inclusive cum per partition, broadcast prefix
-        # offsets make them global.  Descending rank / cum_share derive
-        # from the ascending pass: with asc order (cnt, key DESC), the
-        # desc order (cnt DESC, key ASC) is its exact reverse, so
-        # rank = m − i + 1 and cum_desc = n − cum_asc + cnt.
-        npart = max(1, min(int(spark.conf.get(
-            "spark.sql.shuffle.partitions", "32")), m // 65536 + 1))
-        part = (counts.repartitionByRange(
-                    npart, F.col("cnt").asc(), F.col("key").desc())
-                .sortWithinPartitions(F.col("cnt").asc(), F.col("key").desc())
-                .withColumn("pid", F.spark_partition_id())
-                .localCheckpoint(eager=True))
-        if npart == 1:
-            offs = [(0, 0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid")
-                          .agg(F.count("*").alias("r"),
-                               F.sum("cnt").alias("s")).collect(),
-                          key=lambda r: r["pid"])
-            offs, oi, oc = [], 0, 0
-            for r in ptot:
-                offs.append((int(r["pid"]), oi, oc))
-                oi += int(r["r"])
-                oc += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, ioff long, coff long")
-
-        def cum(batches):
-            i = 0
-            c = 0
-            for pdf in batches:
-                li = pd.RangeIndex(i + 1, i + 1 + len(pdf)).to_series(
-                    index=pdf.index)
-                lc = pdf["cnt"].cumsum() + c
-                if len(pdf):
-                    i += len(pdf)
-                    c = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "key": pdf["key"],
-                                    "cnt": pdf["cnt"], "i": li, "lc": lc})
-
-        local = part.mapInPandas(
-            cum, "pid int, key string, cnt long, i long, lc long")
-        ranked = (local.join(F.broadcast(odf), "pid")
-                  .select("key", "cnt",
-                          (F.col("i") + F.col("ioff")).alias("__i__"),
-                          (F.col("lc") + F.col("coff")).alias("__ca__")))
-        k = int(self.get_("topK"))
-        rank = F.lit(m) - F.col("__i__") + 1
-        tot = ranked.agg(
-            F.sum("cnt").alias("n"),
-            F.sum(F.col("__i__").cast("double") * F.col("cnt")).alias("iw"),
-            F.sum(F.when(rank <= 1, F.col("cnt")).otherwise(F.lit(0)))
-             .alias("t1"),
-            F.sum(F.when(rank <= k, F.col("cnt")).otherwise(F.lit(0)))
-             .alias("tk")).first()
-        n = float(tot["n"])
-        gini = 2.0 * float(tot["iw"]) / (m * n) - (m + 1) / m
-        cum_desc = F.lit(int(tot["n"])) - F.col("__ca__") + F.col("cnt")
-        return (ranked
-                .select(F.col("key").cast("string").alias("key"), "cnt",
-                        (F.col("cnt") / F.lit(n)).alias("share"),
-                        rank.cast("long").alias("rank"),
-                        (cum_desc / F.lit(n)).alias("cum_share"),
-                        F.lit(float(gini)).alias("gini"),
-                        F.lit(float(tot["t1"]) / n).alias("top1_share"),
-                        F.lit(float(tot["tk"]) / n).alias("topk_share")))
+            return spark.createDataFrame(out, schema)
+        # ascending dataflow.ordered_prefix_sums (no single-task global
+        # Window even at 10M distinct keys): the running count of ones is
+        # the 1-based ascending index i, the running cnt the inclusive
+        # cum.  Descending rank / cum_share derive from the ascending
+        # pass: with asc order (cnt, key DESC), the desc order (cnt DESC,
+        # key ASC) is its exact reverse, so rank = m − i + 1 and
+        # cum_desc = n − cum_asc + cnt.
+        with dataflow.ordered_prefix_sums(
+                counts.withColumn("one", F.lit(1).cast("long")),
+                [F.col("cnt").asc(), F.col("key").desc()], ["one", "cnt"],
+                m) as cum:
+            rank = F.lit(m) - F.col("cum_one") + 1
+            tot = cum.agg(
+                F.sum("cnt").alias("n"),
+                F.sum(F.col("cum_one").cast("double") * F.col("cnt"))
+                 .alias("iw"),
+                F.sum(F.when(rank <= 1, F.col("cnt")).otherwise(F.lit(0)))
+                 .alias("t1"),
+                F.sum(F.when(rank <= k, F.col("cnt")).otherwise(F.lit(0)))
+                 .alias("tk")).first()
+            n = float(tot["n"])
+            gini = 2.0 * float(tot["iw"]) / (m * n) - (m + 1) / m
+            cum_desc = F.lit(int(tot["n"])) - F.col("cum_cnt") + F.col("cnt")
+            # key-count-sized result; materialize before unpersisting
+            return (cum
+                    .select(F.col("key").cast("string").alias("key"), "cnt",
+                            (F.col("cnt") / F.lit(n)).alias("share"),
+                            rank.cast("long").alias("rank"),
+                            (cum_desc / F.lit(n)).alias("cum_share"),
+                            F.lit(float(gini)).alias("gini"),
+                            F.lit(float(tot["t1"]) / n).alias("top1_share"),
+                            F.lit(float(tot["tk"]) / n).alias("topk_share"))
+                    .localCheckpoint(eager=True))
 
 
 class VocabGrowthProfiler(Transformer, HasInputCol):

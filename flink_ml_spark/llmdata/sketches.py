@@ -464,6 +464,8 @@ class FrequentLineFilter(Estimator):
     maxBoilerplateLines = IntParam(
         "maxBoilerplateLines", "Fail-fast cap on the verified drop set "
         "held driver-side.", 1_000_000, ParamValidators.gt(0))
+    # the removed sketch gate's params, still in older saves
+    retired_params = frozenset({"depth", "width", "seed"})
 
     def fit(self, *inputs: DataFrame) -> "FrequentLineFilterModel":
         (df,) = inputs

@@ -9,6 +9,7 @@ save/load matches the reference's metadata layout (ReadWriteUtils.java:80-100).
 
 from __future__ import annotations
 
+import warnings
 from typing import Any, Callable, Generic, TypeVar
 
 T = TypeVar("T")
@@ -116,7 +117,12 @@ class WithParams:
     Params are discovered reflectively from class attributes (any attribute
     that is a Param instance, walking the MRO), matching
     ParamUtils.initializeMapWithDefaultValues.
+
+    ``retired_params`` names params a class no longer has: loading a
+    save that still carries one skips it with a warning.
     """
+
+    retired_params: frozenset[str] = frozenset()
 
     def __init__(self, **kwargs: Any):
         self._param_map: dict[Param, Any] = {}
@@ -165,6 +171,10 @@ class WithParams:
 
     def load_params_json(self, data: dict[str, Any]) -> None:
         for name, raw in data.items():
+            if name in self.retired_params:
+                warnings.warn(f"{type(self).__name__}: ignoring retired "
+                              f"param {name!r} from a saved stage")
+                continue
             p = self._param_by_name(name)
             self._param_map[p] = p.json_decode(raw)
 

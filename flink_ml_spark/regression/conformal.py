@@ -12,61 +12,31 @@ k = ⌈(n+1)(1−α)⌉ — an ORDER STATISTIC, not an interpolated percentile
 (interpolation breaks the coverage guarantee at small n).
 
 Scale design: the k-th order statistic is computed distributedly —
-``groupBy(residual)`` tie collapse, then the range-partitioned
-per-partition cumsum with broadcast prefix offsets (the exact-KS /
-midrank geometry; no global single-task sort, nothing corpus-sized
-collected); the threshold is the first residual whose global cumulative
-count reaches k.  The model carries one double.
+``groupBy(residual)`` tie collapse, then ``dataflow.ordered_prefix_sums``
+(the exact-KS / midrank geometry; no global single-task sort, nothing
+corpus-sized collected); the threshold is the smallest residual whose
+global cumulative count reaches k.  The model carries one double.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common.dataflow import ordered_prefix_sums
 from ..param import (FloatParam, HasLabelCol, HasPredictionCol,
                      ParamValidators, StringParam)
 
 
 def _kth_smallest(df: DataFrame, col: str, k: int) -> float:
     """Exact k-th smallest value of ``col`` (1-based), distributed."""
-    spark = df.sparkSession
     g = (df.groupBy(F.col(col).cast("double").alias("v"))
          .agg(F.count("*").alias("c")).persist())
     try:
-        m = g.count()
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        npart = max(1, min(npart, m // 65536 + 1))
-        part = (g.repartitionByRange(npart, F.col("v").asc())
-                .sortWithinPartitions(F.col("v").asc())
-                .withColumn("pid", F.spark_partition_id()).persist())
-        if npart == 1:
-            offs = [(0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid").agg(F.sum("c").alias("s"))
-                          .collect(), key=lambda r: r["pid"])
-            offs, o = [], 0
-            for r in ptot:
-                offs.append((int(r["pid"]), o))
-                o += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, off long")
-
-        def cum(batches):
-            run = 0
-            for pdf in batches:
-                lc = pdf["c"].cumsum() + run
-                if len(pdf):
-                    run = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "v": pdf["v"],
-                                    "lc": lc})
-
-        local = part.mapInPandas(cum, "pid int, v double, lc long")
-        row = (local.join(F.broadcast(odf), "pid")
-               .filter((F.col("lc") + F.col("off")) >= k)
-               .agg(F.min("v")).first())
-        return float(row[0])
+        with ordered_prefix_sums(g, [F.col("v").asc()], ["c"],
+                                 g.count()) as cum:
+            return float(cum.filter(F.col("cum_c") >= k)
+                         .agg(F.min("v")).first()[0])
     finally:
         g.unpersist()
 

@@ -16,11 +16,15 @@ rows = dim·(dim+1)/2 — both independent of corpus size.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..api import AlgoOperator
+from ..common.dataflow import ordered_prefix_sums
 from ..param import HasFeaturesCol, StringParam
 
 _SCHEMA = T.StructType([
@@ -133,51 +137,22 @@ class MutualInformation(AlgoOperator):
             df.sparkSession.createDataFrame(cell_rows, cell_schema)]
 
 
-def _midranks(df: DataFrame, col: str) -> DataFrame:
+@contextmanager
+def _midranks(df: DataFrame, col: str) -> Iterator[DataFrame]:
     """``(v, r2)``: per distinct value of ``col``, TWICE the average-tie
     midrank (``2·(cnt_less + (cnt+1)/2) = 2·cnt_less + cnt + 1`` — always
-    an integer, so rank sums stay exact).  Same scale geometry as
-    BinaryClassificationEvaluator's exact KS: ``groupBy(value)`` tie
-    collapse, range-partitioned per-partition cumsum, broadcast prefix
-    offsets — no global single-task sort, nothing corpus-sized collected."""
-    import pandas as pd
-    spark = df.sparkSession
+    an integer, so rank sums stay exact).  ``groupBy(value)`` tie
+    collapse, then ``dataflow.ordered_prefix_sums`` for the counts below
+    each value — no global single-task sort, nothing corpus-sized
+    collected.  A context: finish every action on the ranks inside it."""
     g = (df.groupBy(F.col(col).cast("double").alias("v"))
          .agg(F.count("*").alias("c")).persist())
     try:
-        m = g.count()
-        if m == 0:
-            return spark.createDataFrame([], "v double, r2 long")
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        npart = max(1, min(npart, m // 65536 + 1))
-        part = (g.repartitionByRange(npart, F.col("v").asc())
-                .sortWithinPartitions(F.col("v").asc())
-                .withColumn("pid", F.spark_partition_id()).persist())
-        if npart == 1:
-            offs = [(0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid").agg(F.sum("c").alias("s"))
-                          .collect(), key=lambda r: r["pid"])
-            offs, o = [], 0
-            for r in ptot:
-                offs.append((int(r["pid"]), o))
-                o += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, off long")
-
-        def cum(batches):
-            run = 0
-            for pdf in batches:
-                lc = pdf["c"].cumsum() + run
-                if len(pdf):
-                    run = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "v": pdf["v"],
-                                    "c": pdf["c"], "lc": lc})
-
-        local = part.mapInPandas(cum, "pid int, v double, c long, lc long")
-        # 2·midrank = 2·(cum_incl − c) + c + 1
-        return (local.join(F.broadcast(odf), "pid")
-                .select("v", (2 * (F.col("lc") + F.col("off") - F.col("c"))
-                              + F.col("c") + 1).alias("r2")))
+        with ordered_prefix_sums(g, [F.col("v").asc()], ["c"],
+                                 g.count()) as cum:
+            # 2·midrank = 2·(cum_incl − c) + c + 1
+            yield cum.select("v", (2 * (F.col("cum_c") - F.col("c"))
+                                   + F.col("c") + 1).alias("r2"))
     finally:
         g.unpersist()
 
@@ -190,8 +165,9 @@ class SpearmanCorrelation(AlgoOperator):
     robust choice for heavy-tailed corpus statistics (doc lengths,
     frequency counts) where Pearson is leverage-dominated.
 
-    Scale design: midranks per column via ``_midranks`` (range-partition
-    cumsum, no global sort), two hash joins back to the rows, then ONE
+    Scale design: midranks per column via ``_midranks``
+    (``dataflow.ordered_prefix_sums``, no global sort), two hash joins
+    back to the rows, then ONE
     aggregation of integer rank sums (doubled midranks are integers, so
     the sums are bit-exact and partition-order independent — the
     determinism lesson from MutualInformation); ρ and p are driver
@@ -212,20 +188,22 @@ class SpearmanCorrelation(AlgoOperator):
         base = (df.select(F.col(xc).cast("double").alias("x"),
                           F.col(yc).cast("double").alias("y"))
                 .filter(F.col("x").isNotNull() & F.col("y").isNotNull()))
-        rx = _midranks(base, "x").withColumnRenamed("r2", "rx")
-        ry = _midranks(base, "y").withColumnRenamed("r2", "ry")
-        j = (base.join(rx, base["x"] == rx["v"]).drop("v")
-             .join(ry, base["y"] == ry["v"]).drop("v"))
         # decimal(38,0) sums: exact integers (no int64 overflow at any
         # corpus size, no float rounding), so the aggregate is bit-identical
         # under any partitioning
         dx = F.col("rx").cast("decimal(19,0)")
         dy = F.col("ry").cast("decimal(19,0)")
-        a = j.agg(F.count("*").alias("n"),
-                  F.sum(dx).alias("sx"), F.sum(dy).alias("sy"),
-                  F.sum((dx * dx).cast("decimal(38,0)")).alias("sxx"),
-                  F.sum((dy * dy).cast("decimal(38,0)")).alias("syy"),
-                  F.sum((dx * dy).cast("decimal(38,0)")).alias("sxy")).first()
+        with _midranks(base, "x") as rx, _midranks(base, "y") as ry:
+            rx = rx.withColumnRenamed("r2", "rx")
+            ry = ry.withColumnRenamed("r2", "ry")
+            j = (base.join(rx, base["x"] == rx["v"]).drop("v")
+                 .join(ry, base["y"] == ry["v"]).drop("v"))
+            a = j.agg(F.count("*").alias("n"),
+                      F.sum(dx).alias("sx"), F.sum(dy).alias("sy"),
+                      F.sum((dx * dx).cast("decimal(38,0)")).alias("sxx"),
+                      F.sum((dy * dy).cast("decimal(38,0)")).alias("syy"),
+                      F.sum((dx * dy).cast("decimal(38,0)")).alias("sxy")
+                      ).first()
         n = int(a["n"])
         schema = "n long, rho double, p_value double"
         if n < 2:

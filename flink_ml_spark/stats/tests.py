@@ -133,11 +133,10 @@ class KolmogorovSmirnovTest(AlgoOperator):
     binning-free statistic).
 
     Scale design: the sup runs through BinaryClassificationEvaluator's
-    exact KS machinery — ``groupBy(value)`` tie collapse, range-partitioned
-    per-partition cumsums with broadcast prefix offsets
-    (``evaluation/binaryclassification.py``) — so there is NO global
-    single-task sort and NO corpus-sized collect; group totals are one
-    extra aggregate.  ``transform(df)`` → one row
+    exact KS machinery — ``groupBy(value)`` tie collapse, then
+    ``dataflow.ordered_prefix_sums`` — so there is NO global single-task
+    sort and NO corpus-sized collect; group totals are one extra
+    aggregate.  ``transform(df)`` → one row
     ``(n_a, n_b, statistic, p_value)``.
     """
 
@@ -284,8 +283,9 @@ class MannWhitneyUTest(AlgoOperator):
     TwoProportionZTest.
 
     Pooled average-tie midranks come from the Spearman machinery
-    (``correlation._midranks``: groupBy tie collapse + range-partition
-    cumsum — no global sort, nothing corpus-sized collected); doubled
+    (``correlation._midranks``: groupBy tie collapse +
+    ``dataflow.ordered_prefix_sums`` — no global sort, nothing
+    corpus-sized collected); doubled
     midranks are integers, so the per-group rank sums are EXACT decimal
     aggregates and 2·U1 = Σ2r₁ − n1(n1+1) is an exact integer.  The
     tie-corrected normal z and its p-value (z² ~ χ²₁) are driver
@@ -310,12 +310,12 @@ class MannWhitneyUTest(AlgoOperator):
         v = F.col(self.get_("valueCol")).cast("double")
         base = (df.filter(g.isNotNull() & v.isNotNull())
                 .select(g.alias("g"), v.alias("val")))
-        ranks = _midranks(base, "val")
-        joined = base.join(ranks, base["val"] == ranks["v"]).drop("v")
-        per = (joined.groupBy("g")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("r2").cast("decimal(38,0)")).alias("sr"))
-               .collect())
+        with _midranks(base, "val") as ranks:
+            joined = base.join(ranks, base["val"] == ranks["v"]).drop("v")
+            per = (joined.groupBy("g")
+                   .agg(F.count(F.lit(1)).alias("n"),
+                        F.sum(F.col("r2").cast("decimal(38,0)")).alias("sr"))
+                   .collect())
         if len(per) != 2:
             raise ValueError(
                 f"MannWhitneyUTest: need exactly 2 groups, saw "

@@ -193,3 +193,54 @@ def test_windows_processing_time_json_roundtrip():
     w = Windows.processing_time_tumbling(10_000)
     assert w.is_processing_time
     assert Windows.from_json(w.to_json()) == w
+
+
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_ordered_prefix_sums_matches_pandas_across_partitions(spark,
+                                                              monkeypatch):
+    """On several range partitions and 7-row Arrow batches, the per-group
+    running sums (a NULL group included, groups spanning partition and
+    batch boundaries) equal a pandas groupby cumsum, and ``by=()`` gives
+    the global cumsum; the persisted relation is released on exit."""
+    import pandas as pd
+    monkeypatch.setattr(D, "ROWS_PER_PART", 60)
+    rng = np.random.RandomState(3)
+    rows = [(["a", "b", None][i % 3], float(rng.randn()), int(rng.randint(1, 9)),
+             float(rng.rand())) for i in range(300)]
+    df = spark.createDataFrame(rows, "g string, v double, c long, w double")
+    ref = pd.DataFrame(rows, columns=["g", "v", "c", "w"])
+    ref["gk"] = ref["g"].fillna("")  # NULL sorts first, like "" here
+    before = _persisted_ids(spark)
+    key = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for by, keys in ((["g"], ["gk"]), ((), [])):
+            with D.ordered_prefix_sums(df, [F.col("v").asc()], ["c", "w"],
+                                       len(rows), by=by) as cum:
+                assert cum.rdd.getNumPartitions() >= 3
+                got = {r["v"]: r for r in cum.collect()}
+            want = ref.sort_values([*keys, "v"])
+            grp = want.groupby(keys or np.zeros(len(want)), sort=False)
+            want_c = dict(zip(want["v"], grp["c"].cumsum()))
+            want_w = dict(zip(want["v"], grp["w"].cumsum()))
+            assert len(got) == len(rows)
+            for v, r in got.items():
+                assert r["cum_c"] == want_c[v], (by, v)
+                assert r["cum_w"] == pytest.approx(want_w[v], rel=1e-12)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", key)
+    assert _persisted_ids(spark) <= before
+
+
+def test_ordered_prefix_sums_releases_cache_on_error(spark):
+    df = spark.createDataFrame([(float(i), 1) for i in range(10)],
+                               "v double, c long")
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError):
+        with D.ordered_prefix_sums(df, [F.col("v").asc()], ["c"], 10) as cum:
+            assert cum.agg(F.max("cum_c")).first()[0] == 10
+            raise RuntimeError("boom")
+    assert _persisted_ids(spark) <= before

@@ -602,17 +602,18 @@ def test_corpus_datasheet(spark):
 
 
 def test_key_skew_local_and_distributed_paths_match(spark, monkeypatch):
-    """The ordered-collect driver path (m <= _SKEW_LOCAL_MAX) and the
-    range-partitioned distributed path must produce identical reports —
-    the distributed path is otherwise never exercised on test-sized
-    keys."""
+    """The ordered-collect driver path (m < dataflow.ROWS_PER_PART) and
+    the range-partitioned distributed path must produce identical
+    reports — the distributed path is otherwise never exercised on
+    test-sized keys.  ROWS_PER_PART=10 puts the 38 keys on 4 range
+    partitions, so the cross-partition offsets are exercised too."""
+    from flink_ml_spark.common import dataflow
     from flink_ml_spark.llmdata import KeySkewProfiler
-    from flink_ml_spark.llmdata import profiler as prof_mod
     rows = [(f"k{i % 37}",) for i in range(1500)] + [("hot",)] * 400
     df = spark.createDataFrame(rows, "k string")
     p = KeySkewProfiler(inputCol="k", topK=3)
     local = sorted(map(tuple, p.transform(df)[0].collect()))
-    monkeypatch.setattr(prof_mod, "_SKEW_LOCAL_MAX", 0)
+    monkeypatch.setattr(dataflow, "ROWS_PER_PART", 10)
     dist = sorted(map(tuple, p.transform(df)[0].collect()))
     assert len(local) == 38
     assert local == dist

@@ -160,6 +160,33 @@ def test_frequent_line_filter_drops_verified_boilerplate(spark, tmp_path):
     assert loaded.model_data["boilerplate"] == m.model_data["boilerplate"]
 
 
+def test_frequent_line_filter_loads_save_with_retired_params(spark,
+                                                            tmp_path):
+    """A FrequentLineFilter saved while it still carried the count-min
+    gate's depth/width/seed params loads: each is skipped with a warning
+    naming it.  Any other unknown param still fails the load."""
+    import json
+    import os
+    from flink_ml_spark.llmdata import FrequentLineFilter
+    p = str(tmp_path / "flf_old")
+    FrequentLineFilter(minCount=7).save(p)
+    meta_path = os.path.join(p, "metadata")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["paramMap"]["width"] = 4096
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.warns(UserWarning, match="'width'"):
+        loaded = Stage.load(spark, p)
+    assert isinstance(loaded, FrequentLineFilter)
+    assert loaded.get_("minCount") == 7
+    meta["paramMap"]["bogus"] = 1
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.warns(UserWarning), pytest.raises(KeyError, match="bogus"):
+        Stage.load(spark, p)
+
+
 def test_frequent_line_filter_equals_exact_filter(spark):
     """The drop set is exactly the line-frequency filter, on a corpus
     whose unique-line long tail dwarfs the frequent lines, with lines

@@ -609,8 +609,8 @@ def test_sliced_auc_dominant_slice_multipartition(spark, monkeypatch):
     from pyspark.sql import functions as F
     from flink_ml_spark.evaluation import (
         BinaryClassificationEvaluator, SlicedBinaryClassificationEvaluator)
-    from flink_ml_spark.evaluation import sliced as sliced_mod
-    monkeypatch.setattr(sliced_mod, "_ROWS_PER_PART", 40)
+    from flink_ml_spark.common import dataflow
+    monkeypatch.setattr(dataflow, "ROWS_PER_PART", 40)
     rng = np.random.RandomState(5)
     rows = []
     for i in range(1200):  # dominant slice: distinct-ish scores + ties

@@ -59,10 +59,12 @@ def main():
     only = set(a for a in sys.argv[1:] if not os.path.isdir(a))
 
     from pyspark.sql import SparkSession
+
+    from bench import driver_memory
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "16g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -40,10 +40,12 @@ MODES = {
 def run_mode(mode: str) -> None:
     seed, master, shuf, extra = MODES[mode]
     from pyspark.sql import SparkSession
+
+    from bench import driver_memory
     b = (SparkSession.builder.master(master)
          .config("spark.sql.shuffle.partitions", shuf)
          .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.driver.memory", "8g")
+         .config("spark.driver.memory", driver_memory())
          .config("spark.ui.enabled", "false"))
     for k, v in extra.items():
         b = b.config(k, v)

@@ -77,6 +77,8 @@ def audit(name, df):
 
 def main():
     from pyspark.sql import SparkSession
+
+    from bench import driver_memory
     from flink_ml_spark.queries import all_queries
 
     spark = (SparkSession.builder.master("local[8]")
@@ -84,7 +86,7 @@ def main():
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "12g")
+             .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
