@@ -66,33 +66,26 @@ def sample_n(df: DataFrame, n: int, seed: int = 0) -> list:
 
 def top_k_per_key(df: DataFrame, part_cols: Sequence[str],
                   order_cols: Sequence[Column], k: int,
-                  salt_cols: Sequence[str],
-                  salt_buckets: int = 32,
                   rank_col: str | None = None) -> DataFrame:
-    """Exact top-k per key with bounded task size (hot-key safe).
+    """Exact top-k per key: one ``row_number()`` window and a ``<= k``
+    filter (the reference's per-partition bounded priority queue merged
+    after the shuffle, LSHModel.java:171-178, is what Spark plans here).
 
-    A plain ``Window.partitionBy(key)`` rank puts EVERY row of a hot key
-    through one task.  This is the classic two-stage refinement: stage 1
-    ranks within (key, salt) — per-task rows bounded by key_rows /
-    salt_buckets — and keeps k per salt; stage 2 ranks the surviving
-    ≤ salt_buckets × k rows per key.  ``order_cols`` must be a TOTAL order
-    (include a tiebreaker) so both stages agree and the result equals the
-    single-stage rank exactly.  ``salt_cols`` name the columns whose
-    deterministic hash spreads a key's rows across salts (use the unique
-    tiebreaker, e.g. the per-row id).  ``rank_col`` keeps the final
-    1-based rank.
+    When k ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+    1000), Spark's InferWindowGroupLimit rule puts a *partial*
+    WindowGroupLimit before the exchange, so each map partition ships at
+    most k rows per key and a hot key never funnels its full row count
+    through one task (with no ``part_cols``, a TakeOrderedAndProject).
+    Above the threshold the plan is a plain window: each key's rows are
+    sorted in one task, with spill.  ``order_cols`` must be a TOTAL order
+    (include a tiebreaker) so the result is engine-exact.  ``rank_col``
+    keeps the 1-based rank.
     """
     from pyspark.sql import Window
-    salt = F.pmod(F.hash(*[F.col(c) for c in salt_cols]), F.lit(salt_buckets))
-    salted = df.withColumn("__salt__", salt)
-    w1 = Window.partitionBy(*part_cols, "__salt__").orderBy(*order_cols)
-    pruned = (salted.withColumn("__rn1__", F.row_number().over(w1))
-              .filter(F.col("__rn1__") <= k).drop("__rn1__"))
-    w2 = Window.partitionBy(*part_cols).orderBy(*order_cols)
-    ranked = pruned.withColumn(rank_col or "__rn2__",
-                               F.row_number().over(w2))
-    out = ranked.filter(F.col(rank_col or "__rn2__") <= k).drop("__salt__")
-    return out if rank_col else out.drop("__rn2__")
+    rn = rank_col or "__rn__"
+    w = Window.partitionBy(*part_cols).orderBy(*order_cols)
+    out = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+    return out if rank_col else out.drop(rn)
 
 
 def all_reduce_sum(df: DataFrame, vec_col: str) -> np.ndarray:

@@ -33,7 +33,7 @@ class RankingEvaluator(AlgoOperator):
 
     Plan: predictions ⋈ truth on (query, doc) — both sides are
     query-result-sized, not corpus-sized; one groupBy(query) for
-    DCG/hits/MRR; IDCG from the truth side's salted exact top-k; a
+    DCG/hits/MRR; IDCG from the truth side's exact top-k; a
     final broadcast-sized join stitches the per-query scalars.  Queries
     with no relevant docs report recall/mrr/ndcg = 0 (not null), and a
     query present only in the TRUTH (the retriever returned nothing for
@@ -72,11 +72,11 @@ class RankingEvaluator(AlgoOperator):
              .alias("first_rel")))
 
         # ideal DCG from the truth's own top-k (total order: relevance
-        # desc, doc id asc), via the hot-key-safe two-stage rank
+        # desc, doc id asc)
         from ..common.dataflow import top_k_per_key
         ideal = top_k_per_key(
             t, [qid], [F.col("__rel__").desc(), F.col(did)], k,
-            salt_cols=[did], rank_col="__irn__")
+            rank_col="__irn__")
         idcg = (ideal.withColumn(
             "__iterm__",
             F.col("__rel__") / (F.log(F.col("__irn__").cast("double") + 1.0)
@@ -126,7 +126,7 @@ class ReciprocalRankFusion(AlgoOperator):
 
     Plan: union of run outputs (already query-result-sized, NOT
     corpus-sized) → one groupBy(query, doc) partial-aggregated sum →
-    salted exact top-k per query.  Scale is driven by Σ|runs| = queries
+    exact top-k per query.  Scale is driven by Σ|runs| = queries
     × k × runs rows regardless of corpus size.
     """
 
@@ -157,5 +157,5 @@ class ReciprocalRankFusion(AlgoOperator):
         from ..common.dataflow import top_k_per_key
         out = top_k_per_key(scores, [q],
                             [F.col("rrf").desc(), F.col(d).asc()],
-                            self.get_("k"), salt_cols=[d], rank_col="rank")
+                            self.get_("k"), rank_col="rank")
         return [out]

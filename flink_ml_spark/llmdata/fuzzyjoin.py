@@ -112,7 +112,7 @@ class FuzzyStringJoin(AlgoOperator):
             # pairs), THEN expand ids and re-rank exactly
             cand = top_k_per_key(cand, ["__rs__"],
                                  [F.asc("distance"), F.asc("__lmin__")], kb,
-                                 salt_cols=["__lmin__"], rank_col="__sk__") \
+                                 rank_col="__sk__") \
                 .select("__ls__", "__rs__", "distance")
             # id-level prune BEFORE the expansion joins (r09; guide
             # §3.3 "explode after the join"): every id pair of string s
@@ -124,7 +124,7 @@ class FuzzyStringJoin(AlgoOperator):
             # string-level result); with it, <= k^2 per right id.
             lids = top_k_per_key(
                 left.select(F.col(lid), F.col(lc).alias("__ls__")),
-                ["__ls__"], [F.asc(lid)], kb, salt_cols=[lid])
+                ["__ls__"], [F.asc(lid)], kb)
         else:
             cand = cand.select("__ls__", "__rs__", "distance")
             lids = left.select(F.col(lid), F.col(lc).alias("__ls__"))
@@ -136,6 +136,6 @@ class FuzzyStringJoin(AlgoOperator):
         if kb > 0:
             pairs = top_k_per_key(pairs, [rid],
                                   [F.asc("distance"), F.asc(lid)], kb,
-                                  salt_cols=[lid], rank_col="__rk__") \
+                                  rank_col="__rk__") \
                 .select(lid, rid, "distance")
         return [pairs]

@@ -384,7 +384,7 @@ class ImportanceResampler(Estimator):
     (poly-hash → gather → per-doc bincount segment sum); the Gumbel key
     is a codegen'd Column expression.  Selection composes downstream: a
     global top-k is TakeOrdered, per-domain exact budgets reuse the
-    salted two-stage rank (StratifiedBudgetSampler).
+    per-key top-k (StratifiedBudgetSampler).
     """
 
     idCol = StringParam("idCol", "Unique id column.", "id")
@@ -517,12 +517,13 @@ class StratifiedBudgetSampler(Transformer):
     reproducible uniform sample of the domain with no RNG state, and ids
     break ties so the result is engine-exact.
 
-    Plan: ``top_k_per_key`` — the two-stage salted rank — so a hot domain
-    (at 100 TB one crawl source can be most of the corpus) never funnels
-    through a single task: stage 1 ranks within (domain, salt) and keeps
-    the per-salt budget, stage 2 ranks the surviving ≤ salts × budget
-    rows.  Two bounded shuffles of (id, domain, hash) triples; text never
-    shuffles (callers semi-join the kept ids back).
+    Plan: ``top_k_per_key`` over the largest budget — one window whose
+    partial window-group limit keeps at most that many rows per domain
+    per map partition before the shuffle, so a hot domain (at 100 TB one
+    crawl source can be most of the corpus) never funnels through a
+    single task while the budget is ≤ 1000 (above that, a domain's rows
+    sort in one task).  One shuffle of (id, domain, hash) triples; text
+    never shuffles (callers semi-join the kept ids back).
     """
 
     idCol = StringParam("idCol", "Unique id column.", "id")
@@ -532,8 +533,7 @@ class StratifiedBudgetSampler(Transformer):
                              "Budget for unlisted domains.", 1000,
                              ParamValidators.gt_eq(0))
     salt = IntParam("salt", "Hash salt.", 7)
-    saltBuckets = IntParam("saltBuckets", "Hot-domain fan-out.", 32,
-                           ParamValidators.gt(0))
+    retired_params = frozenset({"saltBuckets"})
 
     def _budget_expr(self):
         budgets: dict[str, int] = self.get_("budgets")
@@ -553,7 +553,6 @@ class StratifiedBudgetSampler(Transformer):
         ranked = top_k_per_key(
             df.withColumn("__u__", u), [self.get_("domainCol")],
             [F.col("__u__").asc(), F.col(idc).asc()], k_max,
-            salt_cols=[idc], salt_buckets=int(self.get_("saltBuckets")),
             rank_col="__rank__")
         return (ranked.filter(F.col("__rank__") <= self._budget_expr())
                 .drop("__u__", "__rank__"))
@@ -593,7 +592,7 @@ class NegativeSampler(AlgoOperator):
     unit value (ties → lowest id).  The candidate join is
     ``queries × draws × bucketSize`` rows — linear in queries, constant
     per draw, never ``queries × corpus`` — followed by a left_anti join
-    against the positives and two query-partitioned windows (per-query
+    against the positives and three query-keyed top-k ranks (per-query
     cardinality = draws, driver never involved).  All expressions, no
     UDFs.
 
@@ -650,21 +649,16 @@ class NegativeSampler(AlgoOperator):
                 .join(positives.select(F.col(qc).alias("__q__"),
                                        F.col(pc).alias("__doc__")),
                       ["__q__", "__doc__"], "left_anti"))
-        from pyspark.sql import Window
-        w_pick = (Window.partitionBy("__q__", "j")
-                  .orderBy(F.abs(F.col("__du__") - F.col("__u__")),
-                           F.col("__doc__")))
-        picked = (cand.withColumn("__rn__", F.row_number().over(w_pick))
-                  .filter(F.col("__rn__") == 1))
-        w_dedup = Window.partitionBy("__q__", "__doc__").orderBy("j")
-        w_rank = Window.partitionBy("__q__").orderBy("j")
-        out = (picked.withColumn("__dd__", F.row_number().over(w_dedup))
-               .filter(F.col("__dd__") == 1)
-               .withColumn("__k__", F.row_number().over(w_rank))
-               .filter(F.col("__k__") <= k)
-               .select(F.col("__q__").alias(qc),
-                       F.col("__doc__").alias("negative"), "j"))
-        return [out]
+        from ..common.dataflow import top_k_per_key
+        # pick one doc per draw, keep each doc's first draw, then the
+        # first k draws; each order is total up to identical rows (j is
+        # unique per query once every draw has picked one doc)
+        picked = top_k_per_key(cand, ["__q__", "j"], [
+            F.abs(F.col("__du__") - F.col("__u__")), F.col("__doc__")], 1)
+        deduped = top_k_per_key(picked, ["__q__", "__doc__"], [F.col("j")], 1)
+        out = top_k_per_key(deduped, ["__q__"], [F.col("j")], k)
+        return [out.select(F.col("__q__").alias(qc),
+                           F.col("__doc__").alias("negative"), "j")]
 
 
 class WeightedSampler(Transformer):
@@ -676,8 +670,10 @@ class WeightedSampler(Transformer):
     oracle reproduce the exact sample.  ``byCol`` makes it per-group
     (k docs per source/language).
 
-    Scale: the key is a zero-shuffle row expression; selection is the
-    two-stage salted exact top-k — never a global single-task sort."""
+    Scale: the key is a zero-shuffle row expression; selection is
+    ``top_k_per_key`` — a TakeOrderedAndProject without ``byCol``, a
+    partial window-group limit per group with it (k ≤ 1000; above that
+    the rows sort in one task per group, or in one task overall)."""
 
     idCol = StringParam("idCol", "Unique integer id column.", "id")
     weightCol = StringParam("weightCol", "Positive weight column.", "weight")
@@ -713,6 +709,5 @@ class WeightedSampler(Transformer):
         by = self.get_("byCol")
         out = top_k_per_key(tagged, [by] if by else [],
                             [F.desc("__wkey__"), F.asc(idc)],
-                            self.get_("k"), salt_cols=[idc],
-                            rank_col="__wrank__")
+                            self.get_("k"), rank_col="__wrank__")
         return out.drop("__wkey__", "__wrank__")

@@ -52,13 +52,12 @@ class BruteForceKNNJoin(AlgoOperator, HasSeed):
         joined = c.crossJoin(F.broadcast(q))
         cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn__") * F.col("__cn__"))
         scored = joined.withColumn("cosine", cos)
-        # two-stage salted top-k: the per-query candidate set is the whole
-        # corpus here, so a single-window rank would drag it through one
-        # task per query
+        # the per-query candidate set is the whole corpus here; the
+        # partial window-group limit keeps k per query per map partition
+        # before the shuffle
         from ..common.dataflow import top_k_per_key
-        return [top_k_per_key(scored, [qid],
-                              [F.desc("cosine"), F.asc(cid)], self.get_("k"),
-                              salt_cols=[cid], rank_col="rank")
+        return [top_k_per_key(scored, [qid], [F.desc("cosine"), F.asc(cid)],
+                              self.get_("k"), rank_col="rank")
                 .select(qid, cid, "cosine", "rank")]
 
 
@@ -323,7 +322,7 @@ class IVFIndexModel(Model):
             cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn__") * F.col("__cn__"))
             return (top_k_per_key(joined.withColumn("cosine", cos), [query_id],
                                   [F.desc("cosine"), F.asc(corpus_id)], k,
-                                  salt_cols=[corpus_id], rank_col="rank")
+                                  rank_col="rank")
                     .select(query_id, corpus_id, "cosine", "rank"))
         if candidate_filter is not None or carry_query_cols or carry_corpus_cols:
             raise ValueError("candidate_filter/carry columns are only "
@@ -342,11 +341,11 @@ class IVFIndexModel(Model):
         if rerank <= 0:
             return (top_k_per_key(scored, [query_id],
                                   [F.desc("cosine_q"), F.asc(corpus_id)], k,
-                                  salt_cols=[corpus_id], rank_col="rank")
+                                  rank_col="rank")
                     .select(query_id, corpus_id, "cosine_q", "rank"))
         cands = top_k_per_key(scored, [query_id],
                               [F.desc("cosine_q"), F.asc(corpus_id)], rerank,
-                              salt_cols=[corpus_id], rank_col="__crank__") \
+                              rank_col="__crank__") \
             .select(query_id, corpus_id)
         # exact rerank: true vectors join the SMALL candidate set by id
         exact = (cands
@@ -364,7 +363,7 @@ class IVFIndexModel(Model):
         cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn2__") * F.col("__cn2__"))
         return (top_k_per_key(exact.withColumn("cosine", cos), [query_id],
                               [F.desc("cosine"), F.asc(corpus_id)], k,
-                              salt_cols=[corpus_id], rank_col="rank")
+                              rank_col="rank")
                 .select(query_id, corpus_id, "cosine", "rank"))
 
 
@@ -883,7 +882,7 @@ class HardNegativeMiner(AlgoOperator, HasSeed):
     Scale design: composes the IVF machinery — fit the coarse quantizer,
     assign cells once, probe ``nprobe`` cells per anchor with labels
     carried through the candidate join, and apply the label-mismatch
-    predicate BEFORE the salted exact top-k, so filtering never
+    predicate BEFORE the exact top-k, so filtering never
     under-fills k and excluded candidates never reach the cosine
     arithmetic.  Candidate volume = anchors · nprobe · (n/nlist), never
     anchors · corpus.

@@ -1007,8 +1007,8 @@ class Bm25Retriever(AlgoOperator):
          postings list — and its idf ≈ 0 contribution is exactly the
          mass BM25 already ignores);
       4. per-(query, doc) score — ONE groupBy sum;
-      5. exact top-k per query via the two-stage salted rank
-         (hot-query safe).
+      5. exact top-k per query (``top_k_per_key``: a partial
+         window-group limit before the shuffle, hot-query safe).
 
     ``scoreRounding`` (decimals) snaps scores before ranking — summation
     order across partitions can move the last ulp, and two docs with the
@@ -1086,8 +1086,9 @@ def _bm25_build_index(corpus: DataFrame, idc: str, txt: str,
     norm, not raw tf — a tf-3 posting in a 10k-token document is weaker
     than a tf-2 posting in a 40-token one), ties by doc id.  df is
     computed BEFORE pruning so idf stays the true corpus statistic; the
-    cut is per-token bounded via the salted two-stage top-k, so a
-    stopword's postings list prunes without a hot task."""
+    cut is ``top_k_per_key``, whose partial window-group limit prunes a
+    stopword's postings list per map partition before the shuffle (for
+    P > 1000 the list sorts in one task)."""
     toks = _tokens(F.coalesce(F.col(txt), F.lit("")))
     stats = corpus.agg(F.count(F.lit(1)).alias("n"),
                        F.avg(F.size(toks)).alias("avgdl")).first()
@@ -1113,7 +1114,7 @@ def _bm25_build_index(corpus: DataFrame, idc: str, txt: str,
         postings = top_k_per_key(
             postings.withColumn("__imp__", impact), ["tok"],
             [F.col("__imp__").desc(), F.col(idc)],
-            int(max_postings_per_token), salt_cols=[idc]) \
+            int(max_postings_per_token)) \
             .drop("__imp__")
     return n, avgdl, postings, df_rel
 
@@ -1122,7 +1123,7 @@ def _bm25_query(postings, token_stats, n: int, avgdl: float,
                 queries: DataFrame, idc: str, qid: str, qtxt: str,
                 k1: float, b: float, k: int, score_rounding,
                 stats_df: DataFrame | None = None) -> DataFrame:
-    """Broadcast query-term join + score groupBy + salted exact top-k
+    """Broadcast query-term join + score groupBy + exact top-k
     over a normalized (postings, token-stats) index.  df for the query
     terms comes from ONE broadcast-filtered pass over the vocab-sized
     token-stats relation — the corpus-sized postings see a single
@@ -1166,7 +1167,7 @@ def _bm25_query(postings, token_stats, n: int, avgdl: float,
     from ..common.dataflow import top_k_per_key
     out = top_k_per_key(
         scored, [qid], [F.col("score").desc(), F.col(idc)],
-        k, salt_cols=[idc], rank_col="rank")
+        k, rank_col="rank")
     return out.select(qid, idc, "score", "rank")
 
 

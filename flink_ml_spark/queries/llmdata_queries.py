@@ -1383,13 +1383,14 @@ def domain_mixture(spark, sf_dir):
 
 def stratified_budget(spark, sf_dir):
     """Exact per-domain document budgets (hard caps, not keep-rates):
-    deterministic hash-order top-k per source via the two-stage salted
-    rank, so one hot domain never funnels through a single task."""
+    deterministic hash-order top-k per source via ``top_k_per_key``,
+    whose partial window-group limit keeps one hot domain from funneling
+    through a single task."""
     from ..llmdata import StratifiedBudgetSampler
     docs = load(spark, sf_dir, "documents")
     s = StratifiedBudgetSampler(idCol="doc_id", domainCol="source",
                                 budgets={"src0": 10, "src1": 15},
-                                defaultBudget=12, saltBuckets=8)
+                                defaultBudget=12)
     return s.transform(docs)[0].select("doc_id", "source")
 
 
@@ -1931,8 +1932,8 @@ def llm_prep_pipeline_v6(spark, sf_dir):
     of document-level drops) → min-length floor on the cleaned text →
     exact per-domain document budgets (deterministic hash-order top-k).
     At 100 TB: the gate and floor are narrow scans, span removal shuffles
-    fixed-width (id, pos, hash) triples only, and the budget rank is the
-    two-stage salted top-k — no stage carries text except the one id-keyed
+    fixed-width (id, pos, hash) triples only, and the budget rank is
+    one per-domain top-k — no stage carries text except the one id-keyed
     join that rewrites it."""
     from ..llmdata import (CharEntropyScorer, DuplicateSpanRemover,
                            StratifiedBudgetSampler, TokenCounter)
@@ -1958,7 +1959,7 @@ def llm_prep_pipeline_v6(spark, sf_dir):
     # rank budgets on the narrow (id, domain) pair; text rejoins by id
     ids = StratifiedBudgetSampler(
         idCol="doc_id", domainCol="source", budgets={"src0": 5, "src1": 8},
-        defaultBudget=10, saltBuckets=8) \
+        defaultBudget=10) \
         .transform(kept.select("doc_id", "source"))[0]
     final = kept.join(ids.select("doc_id"), "doc_id", "left_semi")
     return final.select("doc_id", "source",
@@ -3260,7 +3261,7 @@ def bm25_retrieval(spark, sf_dir):
     queries are the first-5-token prefixes of every doc_id % 100 == 7
     document; each retrieves its 5 best documents by Okapi BM25.  Plan:
     one stats agg + one postings groupBy + broadcast query-term join +
-    one score groupBy + salted exact top-k; scoreRounding=6 snaps
+    one score groupBy + exact per-query top-k; scoreRounding=6 snaps
     cross-partition sum-order ulps so ranking ties are true ties broken
     by doc_id in both engines."""
     from ..llmdata import Bm25Retriever
@@ -4586,8 +4587,8 @@ FROM s ORDER BY abs(z) DESC, token LIMIT 25
 
 def weighted_sample(spark, sf_dir):
     """WeightedSampler: 5 docs per source, inclusion ∝ n_chars —
-    Efraimidis–Spirakis u^(1/w) keys over the deterministic LCG, salted
-    exact top-k per group; key rounded to 12 decimals so pow()'s last
+    Efraimidis–Spirakis u^(1/w) keys over the deterministic LCG, exact
+    top-k per group; key rounded to 12 decimals so pow()'s last
     ulp can't reorder ties across engines."""
     from ..llmdata import WeightedSampler
     docs = load(spark, sf_dir, "documents")

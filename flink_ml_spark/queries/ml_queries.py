@@ -705,7 +705,7 @@ FROM m, t
 def dataflow_pipeline(spark, sf_dir):
     """Driver-green coverage for the dataflow primitives (SURVEY §2.8,
     reference DataStreamUtils): co_group (customer ⋈ orders per key) into
-    top_k_per_key (two-stage salted exact top-k per market segment)."""
+    top_k_per_key (exact top-k per market segment)."""
     import pandas as pd
     from ..common.dataflow import co_group, top_k_per_key
     cust = load(spark, sf_dir, "customer")
@@ -740,7 +740,7 @@ def dataflow_pipeline(spark, sf_dir):
         "c_custkey long, c_mktsegment string, n_orders long, spend double")
     top = top_k_per_key(per_c, ["c_mktsegment"],
                         [F.col("spend").desc(), F.col("c_custkey")],
-                        5, salt_cols=["c_custkey"], rank_col="rank")
+                        5, rank_col="rank")
     return top.select("c_mktsegment", "c_custkey", "n_orders",
                       q4(F.col("spend")).alias("spend"), "rank")
 
@@ -1348,7 +1348,7 @@ ALS_SQL = _als_sql()
 
 def als_recommend(spark, sf_dir):
     """ALSModel.recommend_for_users: exact top-5 items for a 1/50 user
-    slice via broadcast item factors + salted top-k.  Scores are exact
+    slice via broadcast item factors + per-user top-k.  Scores are exact
     integer dot products on the factor grid, so ranking ties break
     identically in both engines (score desc, item asc)."""
     from ..recommendation import ALS as _ALS

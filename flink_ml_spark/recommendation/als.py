@@ -312,9 +312,10 @@ class ALSModel(Model):
         """Top-``k`` items per requested user: broadcast the item-factor
         relation (model-sized; fail fast above ``max_broadcast_items``
         — at larger catalogs build an ANN index over the item factors,
-        e.g. ``IVFIndex``, instead of exact scoring) and rank with the
-        salted exact top-k, so a hot request set never funnels one
-        task.  Returns (userCol, itemCol, score, rank)."""
+        e.g. ``IVFIndex``, instead of exact scoring) and rank with
+        ``top_k_per_key``, whose partial window-group limit keeps k per
+        user per map partition before the shuffle.  Returns (userCol,
+        itemCol, score, rank)."""
         n_items = self.item_factors.count()
         if n_items > max_broadcast_items:
             raise ValueError(
@@ -345,7 +346,7 @@ class ALSModel(Model):
         out = top_k_per_key(
             scored, ["__alsu__"],
             [F.col("score").desc(), F.col("__alsi__")], int(k),
-            salt_cols=["__alsi__"], rank_col="rank")
+            rank_col="rank")
         return out.select(F.col("__alsu__").alias(ucol),
                           F.col("__alsi__").alias(icol), "score", "rank")
 

@@ -66,12 +66,13 @@ class Swing(AlgoOperator):
         # carry w on the (u, i) rows from the first aggregation (plain
         # shuffle join on u, AQE free to pick the strategy)
         ui = ui.join(weights, "u")
-        # cap users per item (deterministic: lowest hash first).  Two-stage
-        # salted top-k: a hot item's users never all land in one task
-        # (reference bounds the same blowup by sampling, Swing.java:294-300)
+        # cap users per item (deterministic: lowest hash first; the
+        # reference bounds the same blowup by sampling, Swing.java:294-300).
+        # A cap above 1000 gets no partial window-group limit: each item's
+        # users sort in one task
         from ..common.dataflow import top_k_per_key
         ui = top_k_per_key(ui, ["i"], [F.hash("u"), F.col("u")],
-                           self.get_("maxUserNumPerItem"), salt_cols=["u"])
+                           self.get_("maxUserNumPerItem"))
         # user pairs co-interacting per item (w rides along: 1 double/row)
         a = ui.select(F.col("u").alias("ua"), F.col("i"), F.col("w").alias("wa"))
         b = ui.select(F.col("u").alias("ub"), F.col("i"), F.col("w").alias("wb"))
@@ -90,10 +91,9 @@ class Swing(AlgoOperator):
         item_pairs = (ci.join(cj, ["ua", "ub"]).filter(F.col("i") != F.col("j"))
                       .join(pair_w, ["ua", "ub"])
                       .groupBy("i", "j").agg(F.sum("pw").alias("score")))
-        # per-item top-k, same two-stage shape (hot items at 100 TB)
-        out = (top_k_per_key(item_pairs, ["i"],
-                             [F.desc("score"), F.asc("j")], self.get_("k"),
-                             salt_cols=["j"], rank_col="rank")
+        # per-item top-k (partial window-group limit for k ≤ 1000)
+        out = (top_k_per_key(item_pairs, ["i"], [F.desc("score"), F.asc("j")],
+                             self.get_("k"), rank_col="rank")
                .select(F.col("i").alias("item"), F.col("j").alias("similar_item"),
                        "score", "rank"))
         return [out]

@@ -246,7 +246,7 @@ class OnlineStandardScalerModel(Model, HasFeaturesCol, HasModelVersionCol,
         O(1) plan size regardless of history length; the version table is
         O(versions × dim) — broadcastable model state, like the CASE chain
         it replaces."""
-        from pyspark.sql import Window
+        from ..common.dataflow import top_k_per_key
         spark = df.sparkSession
         delay = float(self.get_("maxAllowedModelDelayMs"))
         vdf = spark.createDataFrame(
@@ -260,9 +260,8 @@ class OnlineStandardScalerModel(Model, HasFeaturesCol, HasModelVersionCol,
               .withColumn("__ts__", ts)
         j = d.join(F.broadcast(vdf),
                    F.col("__ts__") + F.lit(delay) >= F.col("__vts__"), "left")
-        w = Window.partitionBy("__rid__").orderBy(F.desc_nulls_last("__ver__"))
-        best = (j.withColumn("__rn__", F.row_number().over(w))
-                .filter(F.col("__rn__") == 1))
+        # versions are unique, and a null version is a row's only match
+        best = top_k_per_key(j, ["__rid__"], [F.desc_nulls_last("__ver__")], 1)
         fcol = F.col(self.get_("featuresCol"))
         centered = F.zip_with(fcol, F.col("__mean__"), lambda x, m: x - m)
         scaled = F.when(
@@ -271,7 +270,7 @@ class OnlineStandardScalerModel(Model, HasFeaturesCol, HasModelVersionCol,
         out = best.withColumn(out_col, scaled)
         if vcol:
             out = out.withColumn(vcol, F.col("__ver__"))
-        return out.drop("__rid__", "__ts__", "__rn__", "__ver__", "__vts__",
+        return out.drop("__rid__", "__ts__", "__ver__", "__vts__",
                         "__mean__", "__std__")
 
     def _scale_expr(self, v):

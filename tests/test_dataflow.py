@@ -99,20 +99,51 @@ def test_window_all_session(spark):
     assert [r["s"] for r in out] == [3.0, 7.0]
 
 
-def test_top_k_per_key_matches_single_stage(spark):
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("keyed,k", [(True, 7), (True, 1001), (False, 7),
+                                     (False, 1001)],
+                         ids=["keyed-k7", "keyed-k1001", "unkeyed-k7",
+                              "unkeyed-k1001"])
+def test_top_k_per_key_matches_single_stage(spark, keyed, k):
+    """The helper's rank equals the plain window rank computed with the
+    partial window-group limit switched off, on a key holding 90% of the
+    rows, below (k=7) and above (k=1001) the limit's threshold."""
+    from collections import Counter
     from pyspark.sql import Window, functions as F
     from flink_ml_spark.common.dataflow import top_k_per_key
 
-    rows = [(i % 5, i, float((i * 37) % 101)) for i in range(500)]
+    rows = [(0 if i % 10 else 1 + i % 7, i, float((i * 37) % 101))
+            for i in range(3000)]
     df = spark.createDataFrame(rows, "key int, id int, score double")
+    part = ["key"] if keyed else []
     order = [F.desc("score"), F.asc("id")]
-    got = top_k_per_key(df, ["key"], order, 7, salt_cols=["id"],
-                        rank_col="rank", salt_buckets=8)
-    w = Window.partitionBy("key").orderBy(*order)
-    want = (df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 7))
+    got = top_k_per_key(df, part, order, k, rank_col="rank")
+    plan = _plan(got)
+    if keyed and k == 7:
+        assert "WindowGroupLimit" in plan and ", Partial" in plan
+        assert plan.count("Exchange ") == 1
+    elif keyed:
+        assert "WindowGroupLimit" not in plan
+    elif k == 7:
+        assert "TakeOrderedAndProject" in plan
     g = {(r["key"], r["id"], r["rank"]) for r in got.collect()}
-    e = {(r["key"], r["id"], r["rank"]) for r in want.collect()}
+
+    conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        w = Window.partitionBy(*part).orderBy(*order)
+        want = (df.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k))
+        assert "WindowGroupLimit" not in _plan(want)
+        e = {(r["key"], r["id"], r["rank"]) for r in want.collect()}
+    finally:
+        spark.conf.set(conf, old)
+    sizes = Counter(r[0] for r in rows).values() if keyed else [len(rows)]
+    assert len(e) == sum(min(k, n) for n in sizes)
     assert g == e
 
 

@@ -1198,8 +1198,7 @@ def test_stratified_budget_sampler(spark):
     rows = [(i, "big" if i % 4 != 3 else "small") for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
     s = StratifiedBudgetSampler(idCol="doc_id", domainCol="source",
-                                budgets={"big": 40}, defaultBudget=25,
-                                saltBuckets=8)
+                                budgets={"big": 40}, defaultBudget=25)
     out = s.transform(df)[0]
     per = {r[0]: r[1] for r in out.groupBy("source").count().collect()}
     assert per == {"big": 40, "small": 25}  # exact caps
@@ -1207,11 +1206,6 @@ def test_stratified_budget_sampler(spark):
     ids1 = {r["doc_id"] for r in out.collect()}
     ids2 = {r["doc_id"] for r in s.transform(df)[0].collect()}
     assert ids1 == ids2
-    # salting is invisible: 1 bucket == 8 buckets
-    s1 = StratifiedBudgetSampler(idCol="doc_id", domainCol="source",
-                                 budgets={"big": 40}, defaultBudget=25,
-                                 saltBuckets=1)
-    assert ids1 == {r["doc_id"] for r in s1.transform(df)[0].collect()}
     # local parity (and original column set / row order preserved)
     pdf = pd.DataFrame(rows, columns=["doc_id", "source"])
     loc = s.transform_local(pdf)
@@ -1222,6 +1216,34 @@ def test_stratified_budget_sampler(spark):
                                  "doc_id long, source string")
     kept = s.transform(df.union(tiny))[0]
     assert kept.filter("source = 'rare'").count() == 5
+
+
+def test_stratified_budget_sampler_loads_save_with_salt_buckets(spark,
+                                                               tmp_path):
+    """A sampler saved while it still had the retired ``saltBuckets``
+    param loads with a warning naming it, and keeps the same ids."""
+    import json
+    import os
+    from flink_ml_spark.api import Stage
+    from flink_ml_spark.llmdata import StratifiedBudgetSampler
+    rows = [(i, "big" if i % 4 != 3 else "small") for i in range(400)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    s = StratifiedBudgetSampler(idCol="doc_id", domainCol="source",
+                                budgets={"big": 40}, defaultBudget=25)
+    p = str(tmp_path / "sbs_old")
+    s.save(p)
+    meta_path = os.path.join(p, "metadata")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["paramMap"]["saltBuckets"] = 8
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.warns(UserWarning, match="'saltBuckets'"):
+        loaded = Stage.load(spark, p)
+    assert isinstance(loaded, StratifiedBudgetSampler)
+    ids = {r["doc_id"] for r in s.transform(df)[0].collect()}
+    assert len(ids) == 65
+    assert ids == {r["doc_id"] for r in loaded.transform(df)[0].collect()}
 
 
 def test_char_entropy_scorer(spark):

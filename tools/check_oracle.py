@@ -65,7 +65,8 @@ def main():
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.driver.memory", driver_memory())
-             .config("spark.ui.enabled", "false").getOrCreate())
+             .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -46,7 +46,8 @@ def run_mode(mode: str) -> None:
          .config("spark.sql.shuffle.partitions", shuf)
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.driver.memory", driver_memory())
-         .config("spark.ui.enabled", "false"))
+         .config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false"))
     for k, v in extra.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -86,6 +86,7 @@ def main():
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
              .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

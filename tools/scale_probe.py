@@ -5,7 +5,7 @@ report wall time per size.  The synthetic corpus is deliberately HOSTILE:
 one domain holds 70% of the rows (stratified-budget hot-domain path), a
 boilerplate sentence is injected into 30% of documents (hot LSH bucket /
 hot span), and 5% of documents are near-duplicate clones (real dedup
-work).  A near-linear slope across the decades — with the caps and salted
+work).  A near-linear slope across the decades — with the caps and hot-key
 paths engaged — is the measurable form of the "would this hold at 1000x"
 question; a super-linear blowup flags a hot-key or driver-side bottleneck.
 
@@ -91,8 +91,7 @@ def main() -> None:
                   numBlocks=16).transform(docs)[0])
         timed("stratified_budget", lambda: StratifiedBudgetSampler(
             idCol="doc_id", domainCol="source",
-            budgets={"web": n // 20}, defaultBudget=n // 40,
-            saltBuckets=32).transform(docs)[0])
+            budgets={"web": n // 20}, defaultBudget=n // 40).transform(docs)[0])
         timed("dup_span_removal", lambda: DuplicateSpanRemover(
             idCol="doc_id", textCol="text", spanTokens=16, minDocFreq=2,
             outputCol="clean").transform(docs)[0]
