@@ -1,4 +1,4 @@
-"""Distributed per-dimension statistics over ``array<double>`` columns.
+"""Distributed per-dimension and per-column statistics, one pass each.
 
 Replaces the reference's hand-rolled partial-then-final aggregations
 (DataStreamUtils.reduce/aggregate, flink-ml-core/.../datastream/
@@ -6,44 +6,53 @@ DataStreamUtils.java:155-295; StandardScaler partials at
 StandardScaler.java:75-101).  Spark-first plan: ``posexplode`` the vector
 then ``groupBy(pos)`` — Catalyst's HashAggregate does map-side partial
 aggregation, so only ``dim`` rows per partition hit the shuffle regardless
-of row count; the final ``dim``-row result is collected to the driver
-(fixed-size model state only — 100 TB-safe, no p=1 stage on raw data).
+of row count; the ``dim``-row result is collected and sorted on the driver
+(an ``orderBy`` would add a sampling job and a shuffle).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def summarize_vector_col(df: DataFrame, col: str, metrics=("count", "mean", "std", "min", "max")) -> dict[str, np.ndarray]:
     """Compute per-dimension stats of an array<double> column.
 
-    Returns dict of metric -> np.ndarray(dim).  Supported metrics:
-    count, mean, std (unbiased, stddev_samp), var, min, max, max_abs,
-    l1, l2sq, sum.
+    Returns dict of metric -> np.ndarray(dim) for the requested metrics
+    and count: count, mean, std (unbiased, stddev_samp), var, min, max,
+    max_abs, l1, l2sq, sum.  (An ungrouped ``agg`` over ``x[i]`` would
+    plan dim × metrics expressions: too many for a 2^18-dim hashed input.)
     """
     from . import vector as V
     exploded = df.select(F.posexplode(V.dense_input(df, col)).alias("pos", "x"))
-    aggs = [
-        F.count("x").alias("count"),
-        F.sum("x").alias("sum"),
-        F.avg("x").alias("mean"),
-        F.stddev_samp("x").alias("std"),
-        F.var_samp("x").alias("var"),
-        F.min("x").alias("min"),
-        F.max("x").alias("max"),
-        F.max(F.abs(F.col("x"))).alias("max_abs"),
-        F.sum(F.abs(F.col("x"))).alias("l1"),
-        F.sum(F.col("x") * F.col("x")).alias("l2sq"),
-    ]
-    rows = exploded.groupBy("pos").agg(*aggs).orderBy("pos").collect()
-    dim = len(rows)
-    out: dict[str, np.ndarray] = {}
-    for m in set(metrics) | {"count"}:
-        out[m] = np.array([float(r[m]) if r[m] is not None else 0.0 for r in rows])
-    out["dim"] = dim  # type: ignore[assignment]
+    x = F.col("x")
+    aggs = {
+        "count": F.count(x), "sum": F.sum(x), "mean": F.avg(x),
+        "std": F.stddev_samp(x), "var": F.var_samp(x),
+        "min": F.min(x), "max": F.max(x), "max_abs": F.max(F.abs(x)),
+        "l1": F.sum(F.abs(x)), "l2sq": F.sum(x * x),
+    }
+    wanted = sorted(set(metrics) | {"count"})
+    rows = sorted(exploded.groupBy("pos").agg(*[aggs[m].alias(m) for m in wanted])
+                  .collect(), key=lambda r: r["pos"])
+    out: dict[str, np.ndarray] = {
+        m: np.array([float(r[m]) if r[m] is not None else 0.0 for r in rows])
+        for m in wanted}
+    out["dim"] = len(rows)  # type: ignore[assignment]
     return out
+
+
+def value_counts(df: DataFrame, cols: list[str | Column]) -> DataFrame:
+    """Non-null value counts of all ``cols`` in one ``groupBy``: rows
+    ``(c, v, count)``, ``c`` the column's position in ``cols`` and ``v`` its
+    value as a string (StringIndexer.java:74 counts its columns at once)."""
+    pairs = [F.struct(F.lit(i).alias("c"), (F.col(c) if isinstance(c, str) else c)
+                      .cast("string").alias("v"))
+             for i, c in enumerate(cols)]
+    return (df.select(F.inline(F.array(*pairs)))
+            .where(F.col("v").isNotNull())
+            .groupBy("c", "v").count())
 
 
 def quantiles_vector_col(df: DataFrame, col: str, probs: list[float],
@@ -64,7 +73,7 @@ def quantiles_vector_col(df: DataFrame, col: str, probs: list[float],
     parr = F.array(*[F.lit(p) for p in probs])
     accuracy = max(1, int(1.0 / relative_error))
     agg = F.percentile_approx("x", parr, F.lit(accuracy)).alias("q")
-    rows = exploded.groupBy("pos").agg(agg).orderBy("pos").collect()
+    rows = sorted(exploded.groupBy("pos").agg(agg).collect(), key=lambda r: r["pos"])
     return np.array([list(r["q"]) for r in rows], dtype=float)
 
 
@@ -127,16 +136,3 @@ def _exact_quantiles(exploded: DataFrame, probs: list[float]) -> np.ndarray:
         out.append(qs)
     return np.array(out, dtype=float)
 
-
-def weighted_moments(df: DataFrame, features_col: str, weight_col: str | None):
-    """Weighted per-dim (sum_w, sum_wx, sum_wx2) — shared by learners."""
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    ex = df.select(w.alias("w"), F.posexplode(F.col(features_col)).alias("pos", "x"))
-    rows = (ex.groupBy("pos")
-            .agg(F.sum("w").alias("sw"),
-                 F.sum(F.col("w") * F.col("x")).alias("swx"),
-                 F.sum(F.col("w") * F.col("x") * F.col("x")).alias("swx2"))
-            .orderBy("pos").collect())
-    return (np.array([r["sw"] for r in rows]),
-            np.array([r["swx"] for r in rows]),
-            np.array([r["swx2"] for r in rows]))

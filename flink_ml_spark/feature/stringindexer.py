@@ -4,12 +4,14 @@ Reference: feature/stringindexer/StringIndexer.java:74 (orders arbitrary /
 freqAsc / freqDesc / alphabetAsc / alphabetDesc; maxIndexNum for freqDesc;
 handleInvalid keep → index N) and IndexToStringModel.java:52.
 
-Spark-first fit: one groupBy(value).count() per input column (map-side
-combine → at most |distinct| rows shuffled); the vocabulary is driver-held
-model state.  Transform is a broadcast map lookup via a literal
-map expression (O(|vocab|) plan constant) — no join, no shuffle.
-``arbitrary`` order is mapped to a deterministic (freq-desc, value-asc)
-order, declared per SURVEY §7 watch list.
+Spark-first fit: one ``value_counts`` over all input columns (map-side
+combine → at most |distinct| rows shuffled) and one collect; each
+vocabulary is sorted on the driver, which holds it as model state (Python
+orders by code point, Spark by UTF-8 bytes: the same order).  Transform
+is a broadcast map lookup via a literal map expression (O(|vocab|) plan
+constant) — no join, no shuffle.  ``arbitrary`` order is mapped to a
+deterministic (freq-desc, value-asc) order, declared per SURVEY §7 watch
+list.
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common.aggregates import value_counts
+from ..common.dataflow import top_k_per_key
 from ..param import (HasHandleInvalid, HasInputCols, HasOutputCols, IntParam,
                      ParamValidators, StringParam)
 
@@ -35,27 +39,31 @@ class StringIndexer(Estimator, HasInputCols, HasOutputCols, HasHandleInvalid):
         "vocabulary to the driver, so a high-cardinality column (e.g. "
         "10^8 distinct ids mistaken for a category) would OOM it.  Fits "
         "whose vocabulary would exceed this raise with an actionable "
-        "message instead.  The check is one count() over the persisted "
-        "distinct-counts relation — vocab-sized, not corpus-sized.",
+        "message instead.  The check rides on the fit's one collect, "
+        "which a limit stops at inputCols × maxDriverVocabSize + 1 rows.",
         10_000_000, ParamValidators.gt(0))
 
     def fit(self, *inputs: DataFrame) -> "StringIndexerModel":
         (df,) = inputs
+        cols = self.get_("inputCols")
         order = self.get_("stringOrderType")
         guard = self.get_("maxDriverVocabSize")
+        cap = self.get_("maxIndexNum")
+        counts = value_counts(df, cols)
+        if order == "freqDesc" and cap <= guard:
+            # only each column's top maxIndexNum reach the driver; with
+            # cap > guard a column longer than cap fails the guard below
+            counts = top_k_per_key(counts, ["c"], [F.desc("count"), F.asc("v")], cap)
+        # past this limit (an int in Spark) some column holds > guard values
+        per_col: list[list[tuple[str, int]]] = [[] for _ in cols]
+        for r in counts.limit(min(len(cols) * guard + 1, 2**31 - 1)).collect():
+            per_col[r["c"]].append((r["v"], r["count"]))
         vocabs: list[list[str]] = []
-        for c in self.get_("inputCols"):
-            counts = (df.select(F.col(c).cast("string").alias("v"))
-                      .filter(F.col("v").isNotNull())
-                      .groupBy("v").count()).persist()
-            n_distinct = counts.count()
-            effective = min(n_distinct, self.get_("maxIndexNum")) \
-                if order == "freqDesc" else n_distinct
-            if effective > guard:
-                counts.unpersist()
+        for c, vc in zip(cols, per_col):
+            if len(vc) > guard:
                 raise ValueError(
-                    f"StringIndexer: column '{c}' has {n_distinct} distinct "
-                    f"values; collecting a vocabulary of {effective} to the "
+                    f"StringIndexer: column '{c}' has at least {len(vc)} "
+                    f"distinct values; collecting its vocabulary to the "
                     f"driver exceeds maxDriverVocabSize={guard}.  Use "
                     f"stringOrderType='freqDesc' with maxIndexNum<={guard} "
                     f"to keep only the most frequent values, hash the "
@@ -63,20 +71,12 @@ class StringIndexer(Estimator, HasInputCols, HasOutputCols, HasHandleInvalid):
                     f"raise maxDriverVocabSize if the driver really has "
                     f"the memory.")
             if order in ("freqDesc", "arbitrary"):
-                q = counts.orderBy(F.desc("count"), F.asc("v"))
-                if order == "freqDesc":
-                    # push the cap into the plan (TakeOrderedAndProject) —
-                    # the driver never receives more than maxIndexNum rows
-                    q = q.limit(self.get_("maxIndexNum"))
-                rows = q.collect()
+                vc.sort(key=lambda t: (-t[1], t[0]))
             elif order == "freqAsc":
-                rows = counts.orderBy(F.asc("count"), F.asc("v")).collect()
-            elif order == "alphabetAsc":
-                rows = counts.orderBy(F.asc("v")).collect()
-            else:
-                rows = counts.orderBy(F.desc("v")).collect()
-            counts.unpersist()
-            vocabs.append([r["v"] for r in rows])
+                vc.sort(key=lambda t: (t[1], t[0]))
+            else:  # values are distinct, so this orders by value alone
+                vc.sort(reverse=order == "alphabetDesc")
+            vocabs.append([v for v, _ in vc])
         model = StringIndexerModel()
         model.set_(inputCols=self.get_("inputCols"), outputCols=self.get_("outputCols"),
                    handleInvalid=self.get_("handleInvalid"))

@@ -89,7 +89,7 @@ class OnlineStandardScaler(Estimator, HasFeaturesCol, HasModelVersionCol,
                       .groupBy("w", "pos")
                       .agg(F.count("x").alias("n"), F.sum("x").alias("s"),
                            F.sum(F.col("x") * F.col("x")).alias("ss"))
-                      .orderBy("w", "pos").collect())
+                      .collect())
             by_w: dict[int, list] = {}
             for r in groups:
                 by_w.setdefault(int(r["w"]), []).append(r)
@@ -101,7 +101,7 @@ class OnlineStandardScaler(Estimator, HasFeaturesCol, HasModelVersionCol,
                     .groupBy("pos")
                     .agg(F.count("x").alias("n"), F.sum("x").alias("s"),
                          F.sum(F.col("x") * F.col("x")).alias("ss"))
-                    .orderBy("pos").collect())
+                    .collect())
             if rows:
                 self._update(rows)
                 self._emit(version_ts=batch_id)
@@ -150,7 +150,7 @@ class OnlineStandardScaler(Estimator, HasFeaturesCol, HasModelVersionCol,
         rows = (batch_df
                 .select((F.col("win")["start"].cast("double") * 1000).alias("w0"),
                         "pos", "n", "s", "ss")
-                .orderBy("w0", "pos").collect())
+                .collect())
         by_w: dict[float, list] = {}
         for r in rows:
             by_w.setdefault(float(r["w0"]), []).append(r)
@@ -380,7 +380,8 @@ class OnlineLogisticRegression(Estimator, HasFeaturesCol, HasLabelCol,
                 .agg(F.sum(F.col("r") * F.col("x")).alias("g"),
                      F.sum(F.col("r") * F.col("r") * F.col("x") * F.col("x")).alias("g2"),
                      F.count("*").alias("cnt"))
-                .orderBy("pos").collect())
+                .collect())
+        rows.sort(key=lambda r: r["pos"])
         g = np.array([r["g"] for r in rows]) / max(rows[0]["cnt"], 1)
         g2 = np.array([r["g2"] for r in rows]) / max(rows[0]["cnt"], 1)
         a = self.get_("alpha")

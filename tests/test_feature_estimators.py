@@ -6,6 +6,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from flink_ml_spark.feature import (IDF, CountVectorizer, Imputer,
                                     KBinsDiscretizer, MaxAbsScaler,
@@ -14,6 +15,7 @@ from flink_ml_spark.feature import (IDF, CountVectorizer, Imputer,
                                     IndexToStringModel, VarianceThresholdSelector,
                                     VectorIndexer)
 from flink_ml_spark.api import Stage
+from flink_ml_spark.feature.stringindexer import ORDERS
 
 
 @pytest.fixture()
@@ -127,6 +129,141 @@ def test_string_indexer_driver_vocab_guard(spark):
                       stringOrderType="freqDesc", maxIndexNum=50,
                       maxDriverVocabSize=100).fit(df)
     assert len(m.model_data["stringArrays"][0]) == 50
+
+
+def _jobs_of(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tabular_chain_fit_job_counts(spark):
+    """Each fit of the benchmark's tabular chain is one aggregation pass:
+    StringIndexer counts its three columns in one groupBy and Imputer and
+    StandardScaler aggregate once, each with a driver-side sort (the
+    per-column persist + count() + orderBy collects and the range-sorted
+    per-dim stats ran 21 / 2 / 4 jobs, and 31 for the whole Pipeline)."""
+    from flink_ml_spark import Pipeline
+    from flink_ml_spark.classification.linear import LogisticRegression
+    from flink_ml_spark.feature import VectorAssembler
+    from perfbench import datagen
+
+    pdf = datagen.tabular(1, 3000)
+    train = spark.createDataFrame(pdf).localCheckpoint(eager=True)
+    strs = datagen.TABULAR_STRING
+    imputed = ["l_quantity", "l_extendedprice", "l_discount"]
+    si = StringIndexer(inputCols=strs, outputCols=[c + "_idx" for c in strs],
+                       stringOrderType="alphabetAsc")
+    imp = Imputer(inputCols=imputed, outputCols=[c + "_imp" for c in imputed])
+    va = VectorAssembler(inputCols=[c + "_imp" for c in imputed] + ["l_tax"]
+                         + [c + "_idx" for c in strs], outputCol="raw")
+    ss = StandardScaler(inputCol="raw", outputCol="features", withMean=True)
+    lr = LogisticRegression(featuresCol="features", labelCol="label",
+                            maxIter=20, learningRate=0.5,
+                            globalBatchSize=4096)
+    si_m, n = _jobs_of(spark, "chain-si", lambda: si.fit(train))
+    assert n <= 2
+    assert si_m.model_data["stringArrays"] == [
+        sorted(pdf[c].unique()) for c in strs]
+    indexed = si_m.transform(train)[0]
+    imp_m, n = _jobs_of(spark, "chain-imp", lambda: imp.fit(indexed))
+    assert n <= 2
+    assert imp_m.model_data["surrogates"] == pytest.approx(
+        [pdf[c].mean() for c in imputed])
+    raw = va.transform(imp_m.transform(indexed)[0])[0]
+    _, n = _jobs_of(spark, "chain-ss", lambda: ss.fit(raw))
+    assert n <= 2
+    _, n = _jobs_of(spark, "chain-pipeline",
+                    lambda: Pipeline([si, imp, va, ss, lr]).fit(train))
+    assert n <= 10
+
+
+# (sort columns, ascending) per stringOrderType
+_ORDER_BY = {"arbitrary": (["count", "v"], [False, True]),
+             "freqDesc": (["count", "v"], [False, True]),
+             "freqAsc": (["count", "v"], [True, True]),
+             "alphabetAsc": (["v"], [True]), "alphabetDesc": (["v"], [False])}
+
+
+def _spark_sorted_vocab(df, c, order, max_index_num=None):
+    """The vocabulary sorted by Spark: one value count and one orderBy
+    collect per column."""
+    q = (df.select(F.col(c).cast("string").alias("v"))
+         .filter(F.col("v").isNotNull()).groupBy("v").count()
+         .orderBy(_ORDER_BY[order][0], ascending=_ORDER_BY[order][1]))
+    if max_index_num is not None:
+        q = q.limit(max_index_num)
+    return [r["v"] for r in q.collect()]
+
+
+def test_string_indexer_vocab_matches_spark_sort(spark):
+    """The driver-side sort of the one multi-column count gives Spark's
+    order for every stringOrderType: ties, nulls, a numeric column cast to
+    string, and non-ASCII values (Python compares code points, Spark UTF-8
+    bytes)."""
+    rows = [("b", 1, "é"), ("b", 2, "Z"), ("a", 2, "a"), ("c", None, "日本"),
+            ("c", 3, "é"), (None, 3, "Z"), ("a", 10, "a"), ("B", 10, None),
+            ("é", 1, "日本"), ("c", 1, "Z"), ("Z", -4, "a"), (None, 10, "ß")]
+    df = spark.createDataFrame(rows, "s string, n int, u string")
+    cols = ["s", "n", "u"]
+    for order in ORDERS:
+        m = StringIndexer(inputCols=cols, outputCols=["a", "b", "c"],
+                          stringOrderType=order).fit(df)
+        assert m.model_data["stringArrays"] == [
+            _spark_sorted_vocab(df, c, order) for c in cols], order
+    m = StringIndexer(inputCols=cols, outputCols=["a", "b", "c"],
+                      stringOrderType="freqDesc", maxIndexNum=2).fit(df)
+    assert m.model_data["stringArrays"] == [
+        _spark_sorted_vocab(df, c, "freqDesc", 2) for c in cols]
+
+
+def test_string_indexer_multi_column_guard(spark):
+    """With a wide and a narrow column the guard names the wide one, in
+    either column order; freqDesc under the guard keeps each column's top
+    maxIndexNum, and maxIndexNum == guard fits while guard + 1 fails."""
+    df = spark.range(500).selectExpr(
+        "cast(id as string) AS wide", "cast(id % 3 as string) AS narrow")
+    for cols in (["wide", "narrow"], ["narrow", "wide"]):
+        with pytest.raises(ValueError, match="column 'wide'.*maxDriverVocabSize=100"):
+            StringIndexer(inputCols=cols, outputCols=["a", "b"],
+                          stringOrderType="freqAsc",
+                          maxDriverVocabSize=100).fit(df)
+    cols = ["wide", "narrow"]
+    for cap in (50, 100):
+        m = StringIndexer(inputCols=cols, outputCols=["a", "b"],
+                          stringOrderType="freqDesc", maxIndexNum=cap,
+                          maxDriverVocabSize=100).fit(df)
+        assert m.model_data["stringArrays"] == [
+            _spark_sorted_vocab(df, c, "freqDesc", cap) for c in cols]
+        assert len(m.model_data["stringArrays"][0]) == cap
+    with pytest.raises(ValueError, match="column 'wide'"):
+        StringIndexer(inputCols=cols, outputCols=["a", "b"],
+                      stringOrderType="freqDesc", maxIndexNum=101,
+                      maxDriverVocabSize=100).fit(df)
+    # a column exactly at the guard fits
+    m = StringIndexer(inputCols=cols, outputCols=["a", "b"],
+                      stringOrderType="alphabetAsc",
+                      maxDriverVocabSize=500).fit(df)
+    assert [len(v) for v in m.model_data["stringArrays"]] == [500, 3]
+
+
+def test_imputer_most_frequent_multi_column_ties(spark):
+    """All columns in one fit; a tie goes to the numerically smallest value
+    (9.0 before 10.0, which a string order would reverse), and -0.0 counts
+    as 0.0."""
+    nan = float("nan")
+    rows = [(1.0, 10.0, -0.0), (1.0, 9.0, 0.0), (2.0, 10.0, 5.0),
+            (2.0, 9.0, 5.0), (3.0, None, None), (None, nan, 7.0),
+            (nan, 100.0, 8.0)]
+    df = spark.createDataFrame(rows, "x double, y double, z double")
+    m = Imputer(inputCols=["x", "y", "z"], outputCols=["a", "b", "c"],
+                strategy="most_frequent").fit(df)
+    assert m.model_data["surrogates"] == [1.0, 9.0, 0.0]
 
 
 def test_random_splitter_group_split_leakage_safe(spark):

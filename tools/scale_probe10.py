@@ -28,12 +28,14 @@ SIZES = [int(a) for a in sys.argv[1:]] or [500_000, 5_000_000]
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
+    from bench import driver_memory
+
     spark = (SparkSession.builder.master("local[32]")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()  # warmup

@@ -32,6 +32,8 @@ BINS = 128        # 64 × 127 = 8128 comparisons > _CODEGEN_BIN_LIMIT
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
+    from bench import driver_memory
+
     from flink_ml_spark.regression import DecisionTreeRegressor
     from flink_ml_spark.regression.tree import _CODEGEN_BIN_LIMIT
 
@@ -40,7 +42,7 @@ def main() -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()  # warmup

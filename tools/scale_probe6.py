@@ -28,6 +28,8 @@ SIZES = [int(a) for a in sys.argv[1:]] or [50_000, 500_000]
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
+    from bench import driver_memory
+
     from scale_probe2 import make_line_corpus
 
     spark = (SparkSession.builder.master("local[32]")
@@ -35,7 +37,7 @@ def main() -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()  # warmup
