@@ -13,7 +13,7 @@ of row count; the ``dim``-row result is collected and sorted on the driver
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def summarize_vector_col(df: DataFrame, col: str, metrics=("count", "mean", "std", "min", "max")) -> dict[str, np.ndarray]:
@@ -43,12 +43,11 @@ def summarize_vector_col(df: DataFrame, col: str, metrics=("count", "mean", "std
     return out
 
 
-def value_counts(df: DataFrame, cols: list[str | Column]) -> DataFrame:
+def value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
     """Non-null value counts of all ``cols`` in one ``groupBy``: rows
     ``(c, v, count)``, ``c`` the column's position in ``cols`` and ``v`` its
     value as a string (StringIndexer.java:74 counts its columns at once)."""
-    pairs = [F.struct(F.lit(i).alias("c"), (F.col(c) if isinstance(c, str) else c)
-                      .cast("string").alias("v"))
+    pairs = [F.struct(F.lit(i).alias("c"), F.col(c).cast("string").alias("v"))
              for i, c in enumerate(cols)]
     return (df.select(F.inline(F.array(*pairs)))
             .where(F.col("v").isNotNull())

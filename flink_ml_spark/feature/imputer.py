@@ -5,8 +5,8 @@ Reference: feature/imputer/Imputer.java:55 — null and NaN (and an optional
 (Imputer.java:183-240) → Spark's mergeable percentile_approx; most_frequent
 ties broken by smallest value (reference convention).
 
-Fit = one pass over all columns (an ``agg``, or one ``value_counts`` cut to
-each column's top value); transform = coalesce/when, fully JVM-side.
+Fit = one multi-column ``agg`` (mean, median) or one value count per column
+(most_frequent); transform = coalesce/when expressions, fully JVM-side.
 """
 
 from __future__ import annotations
@@ -16,8 +16,6 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
-from ..common.aggregates import value_counts
-from ..common.dataflow import top_k_per_key
 from ..param import (FloatParam, HasInputCols, HasOutputCols, HasRelativeError,
                      ParamValidators, StringParam)
 
@@ -59,13 +57,14 @@ class Imputer(Estimator, HasInputCols, HasOutputCols, HasRelativeError):
                     F.percentile_approx(c, F.lit(0.5), F.lit(acc)).alias(c)
                     for c in in_cols]).collect()[0]
             surrogates = [float(row[c]) for c in in_cols]
-        else:  # most_frequent: ties → smallest value
-            # + 0.0 folds -0.0 into 0.0, as a groupBy on the double does
-            counts = value_counts(clean, [F.col(c) + 0.0 for c in in_cols])
-            top = top_k_per_key(counts, ["c"], [F.desc("count"),
-                                                F.col("v").cast("double")], 1)
-            by_col = {r["c"]: float(r["v"]) for r in top.collect()}
-            surrogates = [by_col[i] for i in range(len(in_cols))]
+        else:  # ties → smallest; per column (one count over all columns ran
+               # 2-3x slower on high-cardinality columns)
+            surrogates = []
+            for c in in_cols:
+                r = (clean.select(c).filter(F.col(c).isNotNull())
+                     .groupBy(c).count()
+                     .orderBy(F.desc("count"), F.asc(c)).limit(1).collect())
+                surrogates.append(float(r[0][c]))
         model = ImputerModel()
         model.set_(inputCols=in_cols, outputCols=self.get_("outputCols"))
         model.set(ImputerModel.missingValue, self.get_("missingValue"))

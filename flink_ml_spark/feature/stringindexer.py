@@ -5,13 +5,12 @@ freqAsc / freqDesc / alphabetAsc / alphabetDesc; maxIndexNum for freqDesc;
 handleInvalid keep → index N) and IndexToStringModel.java:52.
 
 Spark-first fit: one ``value_counts`` over all input columns (map-side
-combine → at most |distinct| rows shuffled) and one collect; each
-vocabulary is sorted on the driver, which holds it as model state (Python
-orders by code point, Spark by UTF-8 bytes: the same order).  Transform
-is a broadcast map lookup via a literal map expression (O(|vocab|) plan
-constant) — no join, no shuffle.  ``arbitrary`` order is mapped to a
-deterministic (freq-desc, value-asc) order, declared per SURVEY §7 watch
-list.
+combine → at most |distinct| rows shuffled), collected once; each driver-held
+vocabulary is sorted in Python (code-point order = Spark's UTF-8 byte order).
+Transform is a broadcast map lookup via a literal map expression
+(O(|vocab|) plan constant) — no join, no shuffle.  ``arbitrary`` order is
+mapped to a deterministic (freq-desc, value-asc) order, declared per SURVEY
+§7 watch list.
 """
 
 from __future__ import annotations
@@ -39,8 +38,8 @@ class StringIndexer(Estimator, HasInputCols, HasOutputCols, HasHandleInvalid):
         "vocabulary to the driver, so a high-cardinality column (e.g. "
         "10^8 distinct ids mistaken for a category) would OOM it.  Fits "
         "whose vocabulary would exceed this raise with an actionable "
-        "message instead.  The check rides on the fit's one collect, "
-        "which a limit stops at inputCols × maxDriverVocabSize + 1 rows.",
+        "message instead.  A failing fit brings at most "
+        "maxDriverVocabSize + 1 vocabulary rows to the driver.",
         10_000_000, ParamValidators.gt(0))
 
     def fit(self, *inputs: DataFrame) -> "StringIndexerModel":
@@ -54,33 +53,34 @@ class StringIndexer(Estimator, HasInputCols, HasOutputCols, HasHandleInvalid):
             # only each column's top maxIndexNum reach the driver; with
             # cap > guard a column longer than cap fails the guard below
             counts = top_k_per_key(counts, ["c"], [F.desc("count"), F.asc("v")], cap)
-        # past this limit (an int in Spark) some column holds > guard values
+        limit = min(guard + 1, 2**31 - 1)  # a limit is an int in Spark
+        rows = counts.limit(limit).collect()
+        if len(rows) == limit:
+            # past the guard together: size each column before collecting all
+            sizes = dict(counts.groupBy("c").count().collect())
+            for i, c in enumerate(cols):
+                if sizes.get(i, 0) > guard:
+                    raise ValueError(
+                        f"StringIndexer: column '{c}' has {sizes[i]} distinct values; "
+                        f"collecting its vocabulary to the driver exceeds "
+                        f"maxDriverVocabSize={guard}.  Use stringOrderType='freqDesc' with "
+                        f"maxIndexNum<={guard} to keep only the most frequent values, hash "
+                        f"the column (FeatureHasher) instead of indexing it, or raise "
+                        f"maxDriverVocabSize if the driver really has the memory.")
+            rows = counts.collect()
         per_col: list[list[tuple[str, int]]] = [[] for _ in cols]
-        for r in counts.limit(min(len(cols) * guard + 1, 2**31 - 1)).collect():
+        for r in rows:
             per_col[r["c"]].append((r["v"], r["count"]))
-        vocabs: list[list[str]] = []
-        for c, vc in zip(cols, per_col):
-            if len(vc) > guard:
-                raise ValueError(
-                    f"StringIndexer: column '{c}' has at least {len(vc)} "
-                    f"distinct values; collecting its vocabulary to the "
-                    f"driver exceeds maxDriverVocabSize={guard}.  Use "
-                    f"stringOrderType='freqDesc' with maxIndexNum<={guard} "
-                    f"to keep only the most frequent values, hash the "
-                    f"column (FeatureHasher) instead of indexing it, or "
-                    f"raise maxDriverVocabSize if the driver really has "
-                    f"the memory.")
-            if order in ("freqDesc", "arbitrary"):
-                vc.sort(key=lambda t: (-t[1], t[0]))
-            elif order == "freqAsc":
-                vc.sort(key=lambda t: (t[1], t[0]))
-            else:  # values are distinct, so this orders by value alone
+        for vc in per_col:
+            if order.startswith("alphabet"):  # distinct values: by value alone
                 vc.sort(reverse=order == "alphabetDesc")
-            vocabs.append([v for v, _ in vc])
+            else:  # arbitrary = freqDesc; ties by value
+                sign = 1 if order == "freqAsc" else -1
+                vc.sort(key=lambda t: (sign * t[1], t[0]))
         model = StringIndexerModel()
         model.set_(inputCols=self.get_("inputCols"), outputCols=self.get_("outputCols"),
                    handleInvalid=self.get_("handleInvalid"))
-        model.model_data = {"stringArrays": vocabs}
+        model.model_data = {"stringArrays": [[v for v, _ in vc] for vc in per_col]}
         return model
 
 

@@ -28,6 +28,22 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(group, fn)``: ``fn()``'s result and the ids of the Spark
+    jobs it launched, counted under the job group ``group``."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

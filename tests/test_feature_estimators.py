@@ -131,19 +131,32 @@ def test_string_indexer_driver_vocab_guard(spark):
     assert len(m.model_data["stringArrays"][0]) == 50
 
 
-def _jobs_of(spark, group, fn):
-    """``fn()``'s result and the number of Spark jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+def _tabular(n):
+    """A small lineitem-shaped frame: three string columns, three numeric
+    columns with nulls, and a label that depends on both (the shape of the
+    benchmark's tabular chain)."""
+    import pandas as pd
+    r = np.random.default_rng(1)
+    qty = r.integers(1, 51, n).astype(float)
+    price = np.round(qty * r.uniform(900.0, 2100.0, n), 2)
+    disc = r.integers(0, 11, n) / 100.0
+    flag = r.choice(["A", "N", "R"], n)
+    mode = r.choice(["AIR", "MAIL", "RAIL", "REG AIR", "SHIP", "TRUCK"], n)
+    instr = r.choice(["COLLECT COD", "NONE", "TAKE BACK RETURN"], n)
+    z = (disc - 0.05) / 0.03 - (qty - 25.5) / 14.4 + (flag == "R") \
+        + r.normal(0.0, 1.0, n)
+    pdf = pd.DataFrame({
+        "l_quantity": qty, "l_extendedprice": price, "l_discount": disc,
+        "l_tax": r.integers(0, 9, n) / 100.0, "l_returnflag": flag,
+        "l_shipmode": mode, "l_shipinstruct": instr,
+        "label": (z > 0.3).astype(float)})
+    for c in ("l_quantity", "l_extendedprice", "l_discount"):
+        pdf.loc[r.random(n) < 0.05, c] = np.nan
+    return pdf
 
 
-def test_tabular_chain_fit_job_counts(spark):
-    """Each fit of the benchmark's tabular chain is one aggregation pass:
+def test_tabular_chain_fit_job_counts(spark, jobs_of):
+    """Each fit of the tabular chain is one aggregation pass:
     StringIndexer counts its three columns in one groupBy and Imputer and
     StandardScaler aggregate once, each with a driver-side sort (the
     per-column persist + count() + orderBy collects and the range-sorted
@@ -151,11 +164,10 @@ def test_tabular_chain_fit_job_counts(spark):
     from flink_ml_spark import Pipeline
     from flink_ml_spark.classification.linear import LogisticRegression
     from flink_ml_spark.feature import VectorAssembler
-    from perfbench import datagen
 
-    pdf = datagen.tabular(1, 3000)
+    pdf = _tabular(3000)
     train = spark.createDataFrame(pdf).localCheckpoint(eager=True)
-    strs = datagen.TABULAR_STRING
+    strs = ["l_returnflag", "l_shipmode", "l_shipinstruct"]
     imputed = ["l_quantity", "l_extendedprice", "l_discount"]
     si = StringIndexer(inputCols=strs, outputCols=[c + "_idx" for c in strs],
                        stringOrderType="alphabetAsc")
@@ -166,21 +178,21 @@ def test_tabular_chain_fit_job_counts(spark):
     lr = LogisticRegression(featuresCol="features", labelCol="label",
                             maxIter=20, learningRate=0.5,
                             globalBatchSize=4096)
-    si_m, n = _jobs_of(spark, "chain-si", lambda: si.fit(train))
-    assert n <= 2
+    si_m, jobs = jobs_of("chain-si", lambda: si.fit(train))
+    assert len(jobs) <= 2
     assert si_m.model_data["stringArrays"] == [
         sorted(pdf[c].unique()) for c in strs]
     indexed = si_m.transform(train)[0]
-    imp_m, n = _jobs_of(spark, "chain-imp", lambda: imp.fit(indexed))
-    assert n <= 2
+    imp_m, jobs = jobs_of("chain-imp", lambda: imp.fit(indexed))
+    assert len(jobs) <= 2
     assert imp_m.model_data["surrogates"] == pytest.approx(
         [pdf[c].mean() for c in imputed])
     raw = va.transform(imp_m.transform(indexed)[0])[0]
-    _, n = _jobs_of(spark, "chain-ss", lambda: ss.fit(raw))
-    assert n <= 2
-    _, n = _jobs_of(spark, "chain-pipeline",
-                    lambda: Pipeline([si, imp, va, ss, lr]).fit(train))
-    assert n <= 10
+    _, jobs = jobs_of("chain-ss", lambda: ss.fit(raw))
+    assert len(jobs) <= 2
+    _, jobs = jobs_of("chain-pipeline",
+                      lambda: Pipeline([si, imp, va, ss, lr]).fit(train))
+    assert len(jobs) <= 10
 
 
 # (sort columns, ascending) per stringOrderType
@@ -252,10 +264,44 @@ def test_string_indexer_multi_column_guard(spark):
     assert [len(v) for v in m.model_data["stringArrays"]] == [500, 3]
 
 
+def test_string_indexer_guard_collects_no_more_than_a_fit(spark, monkeypatch):
+    """A failing fit brings no more rows to the driver than a fitting one
+    may: with one wide column among four narrow ones the guard trips after
+    guard + 1 vocabulary rows and one size row per column, not after
+    inputCols × guard rows.  Narrow vocabularies that together pass the
+    guard still fit."""
+    df = spark.range(1000).selectExpr(
+        "cast(id as string) AS wide",
+        *[f"cast(id % {k} as string) AS n{k}" for k in (2, 3, 4, 5)])
+    collected = []
+    collect = type(df).collect
+
+    def counting_collect(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+    monkeypatch.setattr(type(df), "collect", counting_collect)
+    cols = ["n2", "n3", "wide", "n4", "n5"]
+    outs = [c + "_i" for c in cols]
+    with pytest.raises(ValueError, match="column 'wide' has 1000 distinct"):
+        StringIndexer(inputCols=cols, outputCols=outs,
+                      maxDriverVocabSize=100).fit(df)
+    assert sum(collected) <= 100 + 1 + len(cols)
+    m = StringIndexer(inputCols=cols, outputCols=outs,
+                      stringOrderType="alphabetAsc",
+                      maxDriverVocabSize=1000).fit(df)
+    assert [len(v) for v in m.model_data["stringArrays"]] == [2, 3, 1000, 4, 5]
+    m = StringIndexer(inputCols=["n2", "n3", "n4", "n5"], outputCols=outs[:4],
+                      stringOrderType="alphabetDesc",
+                      maxDriverVocabSize=5).fit(df)
+    assert m.model_data["stringArrays"] == [
+        [str(i) for i in range(k - 1, -1, -1)] for k in (2, 3, 4, 5)]
+
+
 def test_imputer_most_frequent_multi_column_ties(spark):
-    """All columns in one fit; a tie goes to the numerically smallest value
-    (9.0 before 10.0, which a string order would reverse), and -0.0 counts
-    as 0.0."""
+    """Every column gets its own most frequent value; a tie goes to the
+    numerically smallest value (9.0 before 10.0, which a string order would
+    reverse), and -0.0 counts as 0.0."""
     nan = float("nan")
     rows = [(1.0, 10.0, -0.0), (1.0, 9.0, 0.0), (2.0, 10.0, 5.0),
             (2.0, 9.0, 5.0), (3.0, None, None), (None, nan, 7.0),

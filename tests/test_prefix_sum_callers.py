@@ -159,7 +159,7 @@ def test_sliced_auc_matches_numpy_multipartition(sample_df, sample,
                                               abs=1e-12), g
 
 
-def test_evaluator_job_count_is_pinned(spark):
+def test_evaluator_job_count_is_pinned(spark, jobs_of):
     """20k (score, label) rows: the evaluator launches at most the 10
     jobs it launched with its own hand-written cumsum (the shared helper
     skips the offsets join on one range partition, so it runs 9)."""
@@ -171,12 +171,7 @@ def test_evaluator_job_count_is_pinned(spark):
         "score double, label double").localCheckpoint(eager=True)
     ev = BinaryClassificationEvaluator(labelCol="label",
                                        rawPredictionCol="score")
-    sc = spark.sparkContext
-    sc.setJobGroup("evaluator_job_count", "evaluator job count")
-    try:
-        auc = ev.transform(df)[0].first()["areaUnderROC"]
-    finally:
-        sc._jsc.clearJobGroup()
+    auc, jobs = jobs_of("evaluator_job_count",
+                        lambda: ev.transform(df)[0].first()["areaUnderROC"])
     assert auc == pytest.approx(_auc(s, y.astype(float)), abs=1e-12)
-    assert len(sc.statusTracker().getJobIdsForGroup(
-        "evaluator_job_count")) <= 10
+    assert len(jobs) <= 10

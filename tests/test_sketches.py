@@ -205,24 +205,17 @@ def test_frequent_line_filter_equals_exact_filter(spark):
     assert exact == {"BANNER", "EDGE"}
 
 
-def test_frequent_line_filter_fit_runs_no_python_udf(spark):
+def test_frequent_line_filter_fit_runs_no_python_udf(spark, jobs_of):
     """fit is one JVM-side pass: no query it runs holds a Python UDF
     (the former sketch gate hashed every line in an Arrow UDF, twice)."""
     from flink_ml_spark.llmdata import FrequentLineFilter
     rows = [(i, f"unique {i}\nBANNER") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sc = spark.sparkContext
-    group = "flf-fit-no-python-udf"
-    sc.setJobGroup(group, "FrequentLineFilter.fit")
-    try:
-        m = FrequentLineFilter(idCol="doc_id", textCol="text",
-                               minCount=10).fit(df)
-    finally:
-        sc._jsc.clearJobGroup()
+    m, jobs = jobs_of("flf-fit-no-python-udf", lambda: FrequentLineFilter(
+        idCol="doc_id", textCol="text", minCount=10).fit(df))
     assert m.model_data["boilerplate"] == ["BANNER"]
-    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs
-    jsc = sc._jsc.sc()
+    jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty(60000)
     store = spark._jsparkSession.sharedState().statusStore()
     n = store.executionsCount()
