@@ -14,8 +14,13 @@ Sidecar (r09 VERDICT item 1): the stdout detail line is hard-capped at
 per-query comparator empty two rounds running (`"omitted": 123`).  Every
 run therefore ALSO writes the COMPLETE per-query map to
 ``BENCH_DETAIL.json`` next to this file — same totals keys, full
-``queries`` dict (min-of-2 values) plus ``queries_single_pass``.  The
-stdout lines are byte-compatible with r01-r09 (no key changed/removed).
+``queries`` dict (min-of-2 values) plus ``queries_single_pass`` — and the
+same map to ``BENCH_DETAIL_c{cpus}.json``, which a run at another core
+count does not overwrite.  The stdout lines are byte-compatible with
+r01-r09 (no key changed/removed).
+
+The core count is $SPARK_GRAFT_CPUS, else the host's; the session,
+warm-ups and per-entry isolation are ``flink_ml_spark.benchmark.session``.
 """
 
 from __future__ import annotations
@@ -23,12 +28,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from flink_ml_spark.benchmark.session import (BENCH_CONF, host_cpus,
+                                              run_isolated, session, warm_up)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = host_cpus()
 
 # headline set: one per operator family — transformer chain, aggregate-fit
 # scalers, vocab/text, hashing, iterative learners, stats/eval, knn,
@@ -137,119 +144,23 @@ R01_SET = {
 }
 
 
-def driver_memory() -> str:
-    """``spark.driver.memory``: $SPARK_GRAFT_MEM when set, else a quarter
-    of ``MemTotal`` capped at half of ``MemAvailable`` (/proc/meminfo), so
-    the default fits the host it runs on; below 1 GiB it refuses to
-    start rather than risk the host."""
-    if os.environ.get("SPARK_GRAFT_MEM"):
-        return os.environ["SPARK_GRAFT_MEM"]
-    mib = {}
-    with open("/proc/meminfo") as f:
-        for line in f:
-            k, v = line.split(":", 1)
-            mib[k] = int(v.split()[0]) // 1024  # kB -> MiB
-    mb = min(mib["MemTotal"] // 4, mib["MemAvailable"] // 2)
-    if mb < 1024:
-        sys.exit(f"driver memory: {mb} MiB (MemTotal/4, MemAvailable/2) "
-                 "is below 1 GiB; free memory or set SPARK_GRAFT_MEM")
-    return f"{mb}m"
-
-
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("flink_ml_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # split small single-file scans across cores (no shuffle, pushdown
-        # kept); production-scale inputs are already multi-file
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", driver_memory())
-        # 65+ queries × dozens of generated classes each: the default
-        # 240 MB JIT code cache fills mid-session, silently disabling
-        # compilation and inflating every later query (the warning is
-        # hidden at ERROR log level)
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # stage-progress bars write \r-terminated fragments to stdout that
-        # can splice into the same physical line as a JSON print, corrupting
-        # a line-oriented parser's view of the artifact
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("flink_ml_spark_bench", CPUS, conf=BENCH_CONF)
 
     from flink_ml_spark.queries import queries_dict
     queries = queries_dict()
-
-    # JVM/codegen + Python-worker warmup (excluded from timings): touch
-    # numpy/pandas/pyarrow in every reused worker so no query pays the
-    # first-import cost (steady-state throughput, as in the reference's
-    # single-session harness)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _wu(s):
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        a = np.asarray(["warm"] * 4, dtype="U").view(np.uint32)
-        pa.ListArray.from_arrays(pa.array(np.array([0, 2], dtype=np.int32)),
-                                 pa.array(np.zeros(2)))
-        return pd.Series(np.minimum.reduceat(s.to_numpy(), [0]).repeat(len(s)))
-    spark.range(int(CPUS) * 100).repartition(int(CPUS)) \
-        .select(_wu("id")).count()
-
-    # JIT-compile the generate/shuffle codegen templates the text queries
-    # hit first (explode over split crossing an exchange) — one-time JVM
-    # compilation, not data work, so it belongs in warmup
-    from pyspark.sql import functions as _F
-    spark.range(int(CPUS) * 10).repartition(int(CPUS)) \
-        .select(_F.explode(_F.split(_F.lit("a b c"), " ")).alias("t")) \
-        .groupBy("t").count().count()
-
-    # the plain-pickle RDD worker pool (block-cache learners) is separate
-    # from the Arrow UDF pool — warm it too
-    def _wu_rdd(it):
-        import numpy as np
-        yield np.zeros(2).sum()
-    spark.sparkContext.parallelize(range(int(CPUS) * 4), int(CPUS)) \
-        .mapPartitions(_wu_rdd).count()
+    warm_up(spark, CPUS)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
         fn = queries.get(name)
         if fn is None:
             continue
-        t0 = time.time()
         try:
-            df = fn(spark, SF_DIR)
-            df.count()  # materialize fully
-            timings[name] = round(time.time() - t0, 3)
+            timings[name] = run_isolated(spark, fn, SF_DIR)
         except Exception as e:  # record failures as negative sentinel
             print(f"bench error {name}: {e}", file=sys.stderr)
             timings[name] = -1.0
-        # isolation between entries (outside the timed region): drop any
-        # persisted relations a query left behind and nudge the JVM heap,
-        # so one query's residue can't inflate the next one's wall time
-        # (measured 11.9s -> 71.7s on logistic_regression after the
-        # pandas-cogroup pipelines without this).  Release the Python-side
-        # result reference FIRST: localCheckpoint blocks (dedup signature
-        # relations) are not catalog-cached, so they free only when the
-        # ContextCleaner sees the RDD unreachable.
-        df = None
-        import gc
-        gc.collect()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
 
     # Host-noise guard (self-defending artifact): this VM shows 3-8x
     # hypervisor-steal spikes on single runs (a 14s query measured 75.7s
@@ -266,21 +177,10 @@ def main() -> None:
              if t >= 0 and (t >= MIN2_THRESHOLD or n in R01_SET)]
     timings2: dict[str, float] = {}
     for name in rerun:
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        t0 = time.time()
         try:
-            df = fn(spark, SF_DIR)
-            df.count()
-            timings2[name] = round(time.time() - t0, 3)
+            timings2[name] = run_isolated(spark, queries[name], SF_DIR)
         except Exception as e:
             print(f"bench error (pass 2) {name}: {e}", file=sys.stderr)
-        df = None
-        import gc
-        gc.collect()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
     final = {n: (round(min(t, timings2.get(n, t)), 3) if t >= 0 else t)
              for n, t in timings.items()}
     r01_min2 = round(sum(t for n, t in final.items()
@@ -317,7 +217,7 @@ def main() -> None:
               # and 8 cores, and BENCH_DETAIL.json is overwritten by each
               # run — without this key the sidecar left on disk by the
               # LAST run is indistinguishable from the 32-core one
-              "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
+              "cpus": CPUS,
               "value_single_pass": total_single,
               "min2_policy": f"min-of-2 for every entry >= "
                              f"{MIN2_THRESHOLD}s single-run "
@@ -349,18 +249,20 @@ def main() -> None:
     # capped stdout detail line dropped 123/190 entries, so the driver's
     # round-over-round comparator had nothing to join.  File output has
     # no tail-capture limit — write the FULL map as a sidecar in the
-    # repo root (next to this file; ADD-only, stdout unchanged).
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json"), "w") as fh:
-            json.dump({**totals, "queries": final,
-                       "queries_single_pass": timings,
-                       "queries_second_pass": timings2},
-                      fh, separators=(",", ":"), sort_keys=True)
-            fh.write("\n")
-    except OSError as e:  # a read-only checkout must not kill the bench
-        print(f"bench warning: BENCH_DETAIL.json not written: {e}",
-              file=sys.stderr)
+    # repo root (next to this file; ADD-only, stdout unchanged), once as
+    # the latest run and once per core count.
+    for fname in ("BENCH_DETAIL.json", f"BENCH_DETAIL_c{CPUS}.json"):
+        try:
+            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                   fname), "w") as fh:
+                json.dump({**totals, "queries": final,
+                           "queries_single_pass": timings,
+                           "queries_second_pass": timings2},
+                          fh, separators=(",", ":"), sort_keys=True)
+                fh.write("\n")
+        except OSError as e:  # a read-only checkout must not kill the bench
+            print(f"bench warning: {fname} not written: {e}",
+                  file=sys.stderr)
     sys.stdout.flush()
     print()  # a fresh physical line even if \r-progress junk preceded us
     print(json.dumps(totals, separators=(",", ":")))

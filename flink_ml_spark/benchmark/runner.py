@@ -8,6 +8,8 @@ scale=...)`` times fit+transform end-to-end (generation inside the timed
 job, output fully materialized) and returns the reference's metric names.
 
 CLI:  python -m flink_ml_spark.benchmark.runner [name ...] [--scale 0.01]
+(on $SPARK_GRAFT_CPUS or the host's cores, driver memory sized by
+``session.driver_memory()``)
 """
 
 from __future__ import annotations
@@ -204,15 +206,8 @@ def main() -> None:
     p.add_argument("--scale", type=float, default=1.0)
     ns = p.parse_args()
     args, scale = ns.names, ns.scale
-    import os
-    spark = (SparkSession.builder.master("local[*]")
-             .appName("flink_ml_spark_benchmark")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_MEM", "16g"))
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from .session import session
+    spark = session("flink_ml_spark_benchmark")  # AQE is Spark's default
     names = args or sorted(WORKLOADS().keys())
     for name in names:
         print(json.dumps(run_named(spark, name, scale)), flush=True)

@@ -22,30 +22,38 @@ from ..param import (FloatParam, HasInputCols, HasOutputCols, HasRelativeError,
 STRATEGIES = ["mean", "median", "most_frequent"]
 
 
+def _placeholder(mv):
+    """The ``missingValue`` that counts as missing besides null and NaN,
+    or None when it is unset (NaN)."""
+    return None if mv is None or math.isnan(mv) else mv
+
+
+def _is_missing(col, mv):
+    """Spark predicate: ``col`` is null, NaN or the set ``missingValue``."""
+    miss = col.isNull() | F.isnan(col)
+    if _placeholder(mv) is not None:
+        miss = miss | (col == F.lit(mv))
+    return miss
+
+
 class Imputer(Estimator, HasInputCols, HasOutputCols, HasRelativeError):
     strategy = StringParam("strategy", "Imputation strategy.", "mean",
                            ParamValidators.in_array(STRATEGIES))
     missingValue = FloatParam("missingValue", "Placeholder for missing values.",
                               float("nan"))
 
-    def _is_missing(self, c: str):
-        col = F.col(c).cast("double")
-        miss = col.isNull() | F.isnan(col)
-        mv = self.get_("missingValue")
-        if mv is not None and not math.isnan(mv):
-            miss = miss | (col == F.lit(mv))
-        return miss
-
     def fit(self, *inputs: DataFrame) -> "ImputerModel":
         (df,) = inputs
         in_cols = self.get_("inputCols")
         strategy = self.get_("strategy")
+        mv = self.get_("missingValue")
         clean = df.select(*[
-            F.when(~self._is_missing(c), F.col(c).cast("double")).alias(c)
+            F.when(~_is_missing(F.col(c).cast("double"), mv),
+                   F.col(c).cast("double")).alias(c)
             for c in in_cols])
         if strategy == "mean":
             row = clean.agg(*[F.avg(c).alias(c) for c in in_cols]).collect()[0]
-            surrogates = [float(row[c]) for c in in_cols]
+            values = [row[c] for c in in_cols]
         elif strategy == "median":
             rel = self.get_("relativeError")
             if rel == 0:  # exact interpolating percentile (oracle-matched)
@@ -56,18 +64,24 @@ class Imputer(Estimator, HasInputCols, HasOutputCols, HasRelativeError):
                 row = clean.agg(*[
                     F.percentile_approx(c, F.lit(0.5), F.lit(acc)).alias(c)
                     for c in in_cols]).collect()[0]
-            surrogates = [float(row[c]) for c in in_cols]
+            values = [row[c] for c in in_cols]
         else:  # ties → smallest; per column (one count over all columns ran
                # 2-3x slower on high-cardinality columns)
-            surrogates = []
+            values = []
             for c in in_cols:
                 r = (clean.select(c).filter(F.col(c).isNotNull())
                      .groupBy(c).count()
                      .orderBy(F.desc("count"), F.asc(c)).limit(1).collect())
-                surrogates.append(float(r[0][c]))
+                values.append(r[0][c] if r else None)
+        for c, v in zip(in_cols, values):
+            if v is None:
+                raise ValueError(
+                    f"Imputer: column {c!r} has no non-missing value to "
+                    f"take the {strategy} of")
+        surrogates = [float(v) for v in values]
         model = ImputerModel()
         model.set_(inputCols=in_cols, outputCols=self.get_("outputCols"))
-        model.set(ImputerModel.missingValue, self.get_("missingValue"))
+        model.set(ImputerModel.missingValue, mv)
         model.model_data = {"surrogates": surrogates}
         return model
 
@@ -81,16 +95,17 @@ class ImputerModel(Model, HasInputCols, HasOutputCols):
         for c, oc, s in zip(self.get_("inputCols"), self.get_("outputCols"),
                             self.model_data["surrogates"]):
             col = F.col(c).cast("double")
-            miss = col.isNull() | F.isnan(col)
-            if mv is not None and not math.isnan(mv):
-                miss = miss | (col == F.lit(mv))
-            df = df.withColumn(oc, F.when(miss, F.lit(s)).otherwise(col))
+            df = df.withColumn(oc, F.when(_is_missing(col, mv), F.lit(s))
+                               .otherwise(col))
         return df
 
     def transform_local(self, pdf):
         out = pdf.copy()
+        mv = _placeholder(self.get_("missingValue"))
         for c, oc, s in zip(self.get_("inputCols"), self.get_("outputCols"),
                             self.model_data["surrogates"]):
             vals = out[c].astype(float)
+            if mv is not None:
+                vals = vals.mask(vals == mv)
             out[oc] = vals.fillna(s)
         return out

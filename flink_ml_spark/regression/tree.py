@@ -94,7 +94,7 @@ class DecisionTreeRegressor(Estimator, HasFeaturesCol, HasLabelCol,
         "quantile bin edges.  Bin placement only needs ~bins-level "
         "rank resolution, and sketch update cost grows with accuracy "
         "(64-dim × 1M rows, warm: acc 10000 ≈ 187s, 1000 ≈ 19s, "
-        "200 ≈ 5s vs exact 1.6s — tools/scale_probe11.py), so default "
+        "200 ≈ 5s vs exact 1.6s — PLANS.md), so default "
         "to ~2 bins of slack at maxBins=128 and raise only for very "
         "large maxBins.  Exact percentile is faster LOCALLY but "
         "buffers the entire column in one final aggregation group — "

@@ -312,6 +312,21 @@ def test_imputer_most_frequent_multi_column_ties(spark):
     assert m.model_data["surrogates"] == [1.0, 9.0, 0.0]
 
 
+@pytest.mark.parametrize("strategy", ["mean", "median", "most_frequent"])
+@pytest.mark.parametrize("values, missing_value", [
+    ([None, float("nan")], float("nan")), ([-1.0, -1.0], -1.0)])
+def test_imputer_column_without_usable_values_raises(spark, strategy, values,
+                                                     missing_value):
+    """A column holding only missing values (null and NaN, or only the set
+    missingValue) has no surrogate; the error names the column and the
+    strategy."""
+    df = spark.createDataFrame([(1.0, v) for v in values], "y double, x double")
+    imp = Imputer(inputCols=["y", "x"], outputCols=["a", "b"],
+                  strategy=strategy, missingValue=missing_value)
+    with pytest.raises(ValueError, match=f"'x'.*{strategy}"):
+        imp.fit(df)
+
+
 def test_random_splitter_group_split_leakage_safe(spark):
     """String hashCol = leakage-safe group split: every group lands in
     exactly one split, the assignment is repartition-invariant, and the

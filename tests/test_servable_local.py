@@ -53,6 +53,18 @@ def tok_df(spark):
         pd.DataFrame({"tokens": [list(r[0]) for r in TOK_ROWS]})
 
 
+def test_imputer_missing_value_local(spark):
+    """A set missingValue is imputed on the pandas path as in Spark."""
+    from flink_ml_spark.feature import Imputer
+    rows = [(1, 1.0), (2, -1.0), (3, 3.0), (4, None), (5, float("nan")),
+            (6, 5.0)]
+    sdf = spark.createDataFrame(rows, "id long, x double")
+    model = Imputer(inputCols=["x"], outputCols=["o"],
+                    missingValue=-1.0).fit(sdf)
+    assert model.model_data["surrogates"] == [3.0]
+    assert_parity(model, sdf, pd.DataFrame(rows, columns=["id", "x"]), ["o"])
+
+
 def test_elementwise_product_local(spark, vec_df):
     from flink_ml_spark.feature import ElementwiseProduct
     sdf, pdf = vec_df

@@ -58,16 +58,8 @@ def main():
         else "/root/testdata/sf0.01"
     only = set(a for a in sys.argv[1:] if not os.path.isdir(a))
 
-    from pyspark.sql import SparkSession
-
-    from bench import driver_memory
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", driver_memory())
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from flink_ml_spark.benchmark.session import session
+    spark = session("check_oracle", cpus=8, partitions=16)
 
     con = duckdb.connect()
     for t in TABLES:

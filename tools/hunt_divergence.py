@@ -22,36 +22,24 @@ QUERIES = ["mutual_information", "conformal_interval", "vocab_growth",
 SF = "/root/testdata/sf0.01"
 
 MODES = {
-    # mode -> (PYTHONHASHSEED, master, shuffle_partitions, extra_conf)
-    "base": ("0", "local[8]", "16", {}),
-    "seed1": ("1", "local[8]", "16", {}),
-    "seed2": ("31337", "local[8]", "16", {}),
-    "seedrand": (None, "local[8]", "16", {}),
-    "narrow": ("0", "local[2]", "3", {}),
-    "wide": ("0", "local[32]", "200", {}),
-    "noaqe": ("0", "local[8]", "16",
-              {"spark.sql.adaptive.enabled": "false"}),
-    "ansi": ("0", "local[8]", "16", {"spark.sql.ansi.enabled": "true"}),
-    "noarrow": ("0", "local[8]", "16",
+    # mode -> (PYTHONHASHSEED, cores, shuffle_partitions, extra_conf)
+    "base": ("0", 8, 16, {}),
+    "seed1": ("1", 8, 16, {}),
+    "seed2": ("31337", 8, 16, {}),
+    "seedrand": (None, 8, 16, {}),
+    "narrow": ("0", 2, 3, {}),
+    "wide": ("0", 32, 200, {}),
+    "noaqe": ("0", 8, 16, {"spark.sql.adaptive.enabled": "false"}),
+    "ansi": ("0", 8, 16, {"spark.sql.ansi.enabled": "true"}),
+    "noarrow": ("0", 8, 16,
                 {"spark.sql.execution.arrow.pyspark.enabled": "false"}),
 }
 
 
 def run_mode(mode: str) -> None:
-    seed, master, shuf, extra = MODES[mode]
-    from pyspark.sql import SparkSession
-
-    from bench import driver_memory
-    b = (SparkSession.builder.master(master)
-         .config("spark.sql.shuffle.partitions", shuf)
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.driver.memory", driver_memory())
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false"))
-    for k, v in extra.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    _, cpus, partitions, extra = MODES[mode]
+    from flink_ml_spark.benchmark.session import session
+    spark = session(f"hunt_divergence_{mode}", cpus, partitions, extra)
     os.environ["SPARK_GRAFT_SF_DIR"] = SF
     from tools.check_oracle import table_hash
     import __spark_entry__ as entry

@@ -76,20 +76,10 @@ def audit(name, df):
 
 
 def main():
-    from pyspark.sql import SparkSession
-
-    from bench import driver_memory
+    from flink_ml_spark.benchmark.session import session
     from flink_ml_spark.queries import all_queries
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("plan_audit")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", driver_memory())
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plan_audit", cpus=8, partitions=16)
 
     bad = 0
     rows = []
