@@ -39,6 +39,16 @@ def host_cpus() -> int:
     return len(os.sched_getaffinity(0))
 
 
+def meminfo_mib() -> dict[str, int]:
+    """``/proc/meminfo`` in MiB."""
+    mib = {}
+    with open("/proc/meminfo") as f:
+        for line in f:
+            k, v = line.split(":", 1)
+            mib[k] = int(v.split()[0]) // 1024  # kB -> MiB
+    return mib
+
+
 def driver_memory() -> str:
     """``spark.driver.memory``: $SPARK_GRAFT_MEM when set, else a quarter
     of ``MemTotal`` capped at half of ``MemAvailable`` (/proc/meminfo), so
@@ -46,11 +56,7 @@ def driver_memory() -> str:
     start rather than risk the host."""
     if os.environ.get("SPARK_GRAFT_MEM"):
         return os.environ["SPARK_GRAFT_MEM"]
-    mib = {}
-    with open("/proc/meminfo") as f:
-        for line in f:
-            k, v = line.split(":", 1)
-            mib[k] = int(v.split()[0]) // 1024  # kB -> MiB
+    mib = meminfo_mib()
     mb = min(mib["MemTotal"] // 4, mib["MemAvailable"] // 2)
     if mb < 1024:
         sys.exit(f"driver memory: {mb} MiB (MemTotal/4, MemAvailable/2) "

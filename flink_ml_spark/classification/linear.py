@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
-from ..common import vector as V
+from ..common import sqltext as S, vector as V
 from ..common.optimizer import (BinaryLogisticLoss, HingeLoss, HuberLoss,
                                 LeastSquareLoss, PinballLoss, dot_lit, sgd)
 from ..param import (FloatParam, HasElasticNet, HasFeaturesCol,
@@ -60,19 +60,18 @@ class _LinearEstimatorBase(Estimator, HasFeaturesCol, HasLabelCol, HasWeightCol,
 
 
 class _LinearModelBase(Model, HasFeaturesCol, HasPredictionCol, HasRawPredictionCol):
-    def _margin(self, df: DataFrame):
-        """w·x against the literal coefficients; sparse inputs use the
-        sparse-native form Σ v·w[i] over (indices, values) — no densify."""
+    def _margin(self, df: DataFrame) -> str:
+        """SQL text of w·x against the literal coefficients; sparse inputs
+        use the sparse-native form Σ v·w[i] over (indices, values) — no
+        densify."""
         fcol = self.get_("featuresCol")
+        f = S.name(fcol)
         w = np.array(self.model_data["coefficient"])
         if V.is_sparse_type(df, fcol):
-            c = F.col(fcol)
-            lit_w = F.array(*[F.lit(float(x)) for x in w])
-            return F.aggregate(
-                F.zip_with(c["indices"], c["values"],
-                           lambda i, v: v * F.element_at(lit_w, i + 1)),
-                F.lit(0.0), lambda acc, x: acc + x)
-        return dot_lit(F.col(fcol).cast("array<double>"), w)
+            return (f"aggregate(zip_with({f}.`indices`, {f}.`values`, "
+                    f"(i, v) -> v * element_at({S.double_array(w)}, i + 1)), "
+                    f"0.0D, (acc, x) -> acc + x)")
+        return dot_lit(f"CAST({f} AS ARRAY<DOUBLE>)", w)
 
     def _margin_local(self, pdf):
         """w·x for pandas rows: dense lists/arrays or sparse struct dicts
@@ -91,12 +90,11 @@ class _LinearModelBase(Model, HasFeaturesCol, HasPredictionCol, HasRawPrediction
 
 class LogisticRegressionModel(_LinearModelBase):
     def _transform(self, df: DataFrame) -> DataFrame:
-        m = self._margin(df)
-        prob1 = F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
-        return (df.withColumn(self.get_("rawPredictionCol"),
-                              F.array(F.lit(1.0) - prob1, prob1))
-                .withColumn(self.get_("predictionCol"),
-                            F.when(prob1 >= 0.5, 1.0).otherwise(0.0)))
+        p = f"(1.0D / (1.0D + exp(-({self._margin(df)}))))"
+        return df.withColumns({
+            self.get_("rawPredictionCol"): F.expr(f"array(1.0D - {p}, {p})"),
+            self.get_("predictionCol"):
+                F.expr(f"CASE WHEN {p} >= 0.5D THEN 1.0D ELSE 0.0D END")})
 
     def transform_local(self, pdf):
         """Servable path (LogisticRegressionModelServable.java:44-112);
@@ -127,9 +125,10 @@ class LogisticRegression(_LinearEstimatorBase, HasMultiClass):
 class LinearSVCModel(_LinearModelBase):
     def _transform(self, df: DataFrame) -> DataFrame:
         m = self._margin(df)
-        return (df.withColumn(self.get_("rawPredictionCol"), m)
-                .withColumn(self.get_("predictionCol"),
-                            F.when(m >= 0.0, 1.0).otherwise(0.0)))
+        return df.withColumns({
+            self.get_("rawPredictionCol"): F.expr(m),
+            self.get_("predictionCol"):
+                F.expr(f"CASE WHEN {m} >= 0.0D THEN 1.0D ELSE 0.0D END")})
 
     def transform_local(self, pdf):
         m = self._margin_local(pdf)
@@ -146,7 +145,7 @@ class LinearSVC(_LinearEstimatorBase):
 
 class LinearRegressionModel(_LinearModelBase):
     def _transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(self.get_("predictionCol"), self._margin(df))
+        return df.withColumns({self.get_("predictionCol"): F.expr(self._margin(df))})
 
     def transform_local(self, pdf):
         out = pdf.copy()

@@ -9,14 +9,10 @@ into the literals.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import Column, functions as F
 
-
-def _lit_arr(v) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
+from . import sqltext as S
 
 
 def _sum_terms(terms) -> Column:
@@ -45,7 +41,7 @@ def distance_expr(col: Column, center: np.ndarray, measure: str) -> Column:
             xnorm = F.sqrt(_sum_terms([col[j] * col[j] for j in range(dim)]))
             cnorm = float(np.linalg.norm(center))
             return F.lit(1.0) - dot / (xnorm * F.lit(cnorm if cnorm != 0 else 1.0))
-    c = _lit_arr(center)
+    c = F.expr(S.double_array(center))
     if measure == "euclidean":
         d = F.zip_with(col, c, lambda x, y: x - y)
         return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x * x)  # squared

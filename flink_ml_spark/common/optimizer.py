@@ -25,26 +25,23 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-
-def _lit_arr(v) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
+from . import sqltext as S
 
 
-def dot_lit(col: Column, w: np.ndarray) -> Column:
-    # narrow vectors: unrolled element sum — stays inside whole-stage
-    # codegen (higher-order zip_with/aggregate lambdas are interpreted,
-    # measured ~3x slower in the SGD hot loop); wide vectors: HOF form
-    # (unrolling thousands of terms blows up codegen)
+def dot_lit(x: str, w: np.ndarray) -> str:
+    """SQL text of ``x · w`` for ``x`` the SQL text of an array<double>
+    operand (``sqltext.name(c)``, or a cast of it) and ``w`` literal.
+
+    Narrow vectors: unrolled sum of the nonzero terms — stays inside
+    whole-stage codegen (higher-order zip_with/aggregate lambdas are
+    interpreted, measured ~3x slower in the SGD hot loop); wide vectors:
+    HOF form (unrolling thousands of terms blows up codegen)."""
     if len(w) <= 64:
-        terms = [col[j] * float(w[j]) for j in range(len(w)) if w[j] != 0.0]
-        if not terms:
-            return F.lit(0.0)
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-    return F.aggregate(F.zip_with(col, _lit_arr(w), lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
+        terms = [f"{x}[{j}] * {S.double(w[j])}"
+                 for j in range(len(w)) if w[j] != 0.0]
+        return S.left_sum(terms) if terms else "0.0D"
+    return (f"aggregate(zip_with({x}, {S.double_array(w)}, (x, y) -> x * y), "
+            f"0.0D, (acc, x) -> acc + x)")
 
 
 @dataclass
@@ -325,7 +322,7 @@ def sgd(df: DataFrame, features_col: str, label_col: str, weight_col: str | None
                 weight_sum = float(wb.sum())
             else:
                 batch = get_batch(bid)
-                margin = dot_lit(F.col("__f__"), w)
+                margin = F.expr(dot_lit(S.name("__f__"), w))
                 r = (loss.residual(margin, F.col("__y__")) * F.col("__w__")).alias("__r__")
                 l = (loss.loss(margin, F.col("__y__")) * F.col("__w__")).alias("__l__")
                 row = (batch.select(r, l, F.col("__w__"), F.col("__f__"))

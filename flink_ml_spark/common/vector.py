@@ -18,6 +18,8 @@ import pandas as pd
 
 from pyspark.sql import Column, functions as F
 
+from . import sqltext as S
+
 DOUBLE_ARRAY = "array<double>"
 SPARSE_STRUCT = "struct<size:int,indices:array<int>,values:array<double>>"
 
@@ -26,77 +28,41 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a, b) -> Column:
-    """BLAS.dot for dense arrays (BLAS.java:90-118)."""
-    return F.aggregate(F.zip_with(_c(a), _c(b), lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
 # Above this, a single unrolled dot/norm would bloat the generated method
 # toward janino's 64 KB limit; below it, unrolling beats the interpreted
 # HOF fold by an order of magnitude in wide-join hot paths.
 UNROLL_DIM_CAP = 128
 
 
-def dot_fixed(a, b, dim: int | None) -> Column:
-    """``dot`` for a KNOWN dimension: unrolled left-to-right term sum that
-    stays inside whole-stage codegen.  The HOF form runs its lambda
-    INTERPRETED per element — on a candidate join emitting 10⁸ rows that
-    is billions of lambda evals and dominates the whole operator (IVF
-    probe at 500k rows measured ~8× slower than this).  Summation order
-    matches the HOF fold (acc + x, left to right), so results are
-    bit-identical and oracle hashes don't move; unknown/large dims fall
-    back to the HOF."""
-    if dim is None or dim > UNROLL_DIM_CAP or dim <= 0:
-        return dot(a, b)
-    a, b = _c(a), _c(b)
-    terms = [a[j] * b[j] for j in range(dim)]
-    out = F.lit(0.0) + terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+def _unrolled(dim: int | None) -> bool:
+    return dim is not None and 0 < dim <= UNROLL_DIM_CAP
 
 
-def dot_lit_fixed(a, w) -> Column:
-    """Unrolled dot of an array column with a LITERAL numpy vector, same
-    contract as ``dot_fixed`` (codegen, HOF-order summation, fallback
-    above the cap)."""
-    a = _c(a)
-    if len(w) > UNROLL_DIM_CAP or len(w) == 0:
-        return dot(a, F.array(*[F.lit(float(x)) for x in w]))
-    out = F.lit(0.0) + a[0] * float(w[0])
-    for j in range(1, len(w)):
-        out = out + a[j] * float(w[j])
-    return out
+def dot_fixed(a: str, b: str, dim: int | None) -> str:
+    """SQL text of the dot product of array columns ``a`` and ``b`` (names)
+    for a KNOWN dimension: an unrolled left-to-right term sum that stays
+    inside whole-stage codegen.  The HOF form runs its lambda INTERPRETED
+    per element — on a candidate join emitting 10⁸ rows that is billions
+    of lambda evals and dominates the whole operator (IVF probe at 500k
+    rows measured ~8× slower than this).  Summation order matches the HOF
+    fold (acc + x, left to right), so results are bit-identical and oracle
+    hashes don't move; unknown/large dims fall back to the HOF
+    (BLAS.dot, BLAS.java:90-118)."""
+    a, b = S.name(a), S.name(b)
+    if not _unrolled(dim):
+        return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+                f"(acc, x) -> acc + x)")
+    return S.left_sum(["0.0D"] + [f"{a}[{j}] * {b}[{j}]" for j in range(dim)])
 
 
-def sq_norm_fixed(a, dim: int | None) -> Column:
-    """Sum of squares with the same unroll/fallback contract as
-    ``dot_fixed`` (sqrt it for the 2-norm)."""
-    if dim is None or dim > UNROLL_DIM_CAP or dim <= 0:
-        return F.aggregate(_c(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    a = _c(a)
-    out = F.lit(0.0) + a[0] * a[0]
-    for j in range(1, dim):
-        out = out + a[j] * a[j]
-    return out
-
-
-def hadamard(a, b) -> Column:
-    """Element-wise product (BLAS.hDot, BLAS.java:120-151)."""
-    return F.zip_with(_c(a), _c(b), lambda x, y: x * y)
-
-
-def scal(alpha, a) -> Column:
-    """x = a*x (BLAS.scal)."""
-    alpha = F.lit(alpha) if not isinstance(alpha, Column) else alpha
-    return F.transform(_c(a), lambda x: x * alpha)
-
-
-def axpy(alpha, x, y) -> Column:
-    """y += a*x (BLAS.axpy)."""
-    alpha = F.lit(alpha) if not isinstance(alpha, Column) else alpha
-    return F.zip_with(_c(x), _c(y), lambda xi, yi: yi + alpha * xi)
+def sq_norm_fixed(a: str, dim: int | None) -> str:
+    """SQL text of the sum of squares of array column ``a`` (a name), with
+    the same unroll/fallback contract as ``dot_fixed`` (sqrt it for the
+    2-norm)."""
+    a = S.name(a)
+    if not _unrolled(dim):
+        return f"aggregate({a}, 0.0D, (acc, x) -> acc + x * x)"
+    return S.left_sum(["0.0D"] + [f"{a}[{j}] * {a}[{j}]" for j in range(dim)])
 
 
 def p_norm(a, p: float = 2.0) -> Column:
@@ -116,16 +82,6 @@ def p_norm(a, p: float = 2.0) -> Column:
         F.lit(1.0 / p))
 
 
-def sq_dist(a, b) -> Column:
-    """Squared euclidean distance."""
-    d = F.zip_with(_c(a), _c(b), lambda x, y: x - y)
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x * x)
-
-
-def cosine_similarity(a, b) -> Column:
-    return dot(a, b) / (p_norm(a, 2.0) * p_norm(b, 2.0))
-
-
 def to_dense(col, size: int | None = None) -> Column:
     """Sparse struct → dense array.  Needs explicit or embedded size."""
     c = _c(col)
@@ -136,11 +92,6 @@ def to_dense(col, size: int | None = None) -> Column:
         lambda i: F.coalesce(
             F.element_at(F.map_from_arrays(c["indices"], c["values"]), i),
             F.lit(0.0)))
-
-
-def array_col(*cols) -> Column:
-    """Assemble numeric scalar columns into array<double>."""
-    return F.array(*[_c(c).cast("double") for c in cols])
 
 
 def is_sparse_type(df, col_name: str) -> bool:
@@ -178,10 +129,3 @@ def dense_input(df, col_name: str) -> Column:
     if is_sparse_type(df, col_name):
         return _sparse_scatter_udf()(c["size"], c["indices"], c["values"])
     return c.cast(DOUBLE_ARRAY)
-
-
-def dim_of(df, col_name: str) -> int:
-    """Vector dimension from the first row (dense length / sparse size)."""
-    if is_sparse_type(df, col_name):
-        return int(df.select(F.col(col_name)["size"]).first()[0])
-    return len(df.select(col_name).first()[0])

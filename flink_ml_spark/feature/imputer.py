@@ -16,6 +16,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common import sqltext as S
 from ..param import (FloatParam, HasInputCols, HasOutputCols, HasRelativeError,
                      ParamValidators, StringParam)
 
@@ -28,12 +29,17 @@ def _placeholder(mv):
     return None if mv is None or math.isnan(mv) else mv
 
 
-def _is_missing(col, mv):
-    """Spark predicate: ``col`` is null, NaN or the set ``missingValue``."""
-    miss = col.isNull() | F.isnan(col)
+def _is_missing(x: str, mv) -> str:
+    """SQL predicate: ``x`` (SQL text) is null, NaN or the set
+    ``missingValue``."""
+    miss = f"{x} IS NULL OR isnan({x})"
     if _placeholder(mv) is not None:
-        miss = miss | (col == F.lit(mv))
-    return miss
+        miss = f"{miss} OR {x} = {S.double(mv)}"
+    return f"({miss})"
+
+
+def _as_double(c: str) -> str:
+    return f"CAST({S.name(c)} AS DOUBLE)"
 
 
 class Imputer(Estimator, HasInputCols, HasOutputCols, HasRelativeError):
@@ -47,10 +53,9 @@ class Imputer(Estimator, HasInputCols, HasOutputCols, HasRelativeError):
         in_cols = self.get_("inputCols")
         strategy = self.get_("strategy")
         mv = self.get_("missingValue")
-        clean = df.select(*[
-            F.when(~_is_missing(F.col(c).cast("double"), mv),
-                   F.col(c).cast("double")).alias(c)
-            for c in in_cols])
+        clean = df.selectExpr(*[
+            f"CASE WHEN NOT {_is_missing(_as_double(c), mv)} THEN {_as_double(c)} "
+            f"END AS {S.name(c)}" for c in in_cols])
         if strategy == "mean":
             row = clean.agg(*[F.avg(c).alias(c) for c in in_cols]).collect()[0]
             values = [row[c] for c in in_cols]
@@ -92,12 +97,11 @@ class ImputerModel(Model, HasInputCols, HasOutputCols):
 
     def _transform(self, df: DataFrame) -> DataFrame:
         mv = self.get_("missingValue")
-        for c, oc, s in zip(self.get_("inputCols"), self.get_("outputCols"),
-                            self.model_data["surrogates"]):
-            col = F.col(c).cast("double")
-            df = df.withColumn(oc, F.when(_is_missing(col, mv), F.lit(s))
-                               .otherwise(col))
-        return df
+        return df.withColumns({
+            oc: F.expr(f"CASE WHEN {_is_missing(_as_double(c), mv)} THEN "
+                       f"{S.double(s)} ELSE {_as_double(c)} END")
+            for c, oc, s in zip(self.get_("inputCols"), self.get_("outputCols"),
+                                self.model_data["surrogates"])})
 
     def transform_local(self, pdf):
         out = pdf.copy()

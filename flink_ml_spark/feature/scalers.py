@@ -18,30 +18,36 @@ O(dim), embedded in the plan).  100 TB-safe: no p=1 stage touches raw rows.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common import sqltext as S, vector as V
 from ..common.aggregates import quantiles_vector_col, summarize_vector_col
 from ..param import (BoolParam, FloatParam, HasInputCol, HasOutputCol,
                      HasRelativeError, ParamValidators)
 
 
-def _lit_arr(v) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
+def _zip_lit(x: str, v, op: str) -> str:
+    """SQL text of ``zip_with(x, v, (x, y) -> x <op> y)`` for literal ``v``."""
+    return f"zip_with({x}, {S.double_array(v)}, (x, y) -> x {op} y)"
 
 
 class _ScalerModelBase(Model, HasInputCol, HasOutputCol):
     def _affine_transform(self, df: DataFrame, scale: np.ndarray,
                           offset: np.ndarray | None) -> DataFrame:
-        """out = (x - offset) * scale  (offset=None → x * scale)."""
-        from ..common import vector as V
-        col = V.dense_input(df, self.get_("inputCol"))
-        if offset is None:
-            expr = F.zip_with(col, _lit_arr(scale), lambda x, s: x * s)
+        """out = (x - offset) * scale  (offset=None → x * scale).  A sparse
+        input is densified by a UDF under a temporary column first."""
+        c, tmp = self.get_("inputCol"), None
+        if V.is_sparse_type(df, c):
+            tmp = "__dense__"
+            df = df.withColumn(tmp, V.dense_input(df, c))
+            x = S.name(tmp)
         else:
-            paired = F.zip_with(col, _lit_arr(offset), lambda x, o: x - o)
-            expr = F.zip_with(paired, _lit_arr(scale), lambda x, s: x * s)
-        return df.withColumn(self.get_("outputCol"), expr)
+            x = f"CAST({S.name(c)} AS ARRAY<DOUBLE>)"
+        if offset is not None:
+            x = _zip_lit(x, offset, "-")
+        out = df.withColumns({self.get_("outputCol"): F.expr(_zip_lit(x, scale, "*"))})
+        return out.drop(tmp) if tmp else out
 
     def _local_affine(self, pdf, scale, offset):
         out = pdf.copy()
@@ -121,11 +127,8 @@ class MinMaxScalerModel(_ScalerModelBase):
 
     def _transform(self, df: DataFrame) -> DataFrame:
         e_min, scale, shift = self._minmax_components()
-        col = F.col(self.get_("inputCol"))
-        paired = F.zip_with(col, _lit_arr(e_min), lambda x, m: x - m)
-        scaled = F.zip_with(paired, _lit_arr(scale), lambda x, s: x * s)
-        shifted = F.zip_with(scaled, _lit_arr(shift), lambda x, b: x + b)
-        return df.withColumn(self.get_("outputCol"), shifted)
+        x = _zip_lit(_zip_lit(S.name(self.get_("inputCol")), e_min, "-"), scale, "*")
+        return df.withColumns({self.get_("outputCol"): F.expr(_zip_lit(x, shift, "+"))})
 
     def transform_local(self, pdf):
         e_min, scale, shift = self._minmax_components()

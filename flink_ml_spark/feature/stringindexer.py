@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common import sqltext as S
 from ..common.aggregates import value_counts
 from ..common.dataflow import top_k_per_key
 from ..param import (HasHandleInvalid, HasInputCols, HasOutputCols, IntParam,
@@ -87,24 +88,25 @@ class StringIndexer(Estimator, HasInputCols, HasOutputCols, HasHandleInvalid):
 class StringIndexerModel(Model, HasInputCols, HasOutputCols, HasHandleInvalid):
     def _transform(self, df: DataFrame) -> DataFrame:
         mode = self.get_("handleInvalid")
+        outs, found = {}, []
         for c, oc, vocab in zip(self.get_("inputCols"), self.get_("outputCols"),
                                 self.model_data["stringArrays"]):
-            pairs = []
-            for i, v in enumerate(vocab):
-                pairs.extend([F.lit(v), F.lit(float(i))])
-            lookup = F.create_map(*pairs) if pairs else F.create_map()
-            raw = lookup[F.col(c).cast("string")]
+            pairs = ", ".join(f"{S.string(v)}, {S.double(i)}"
+                              for i, v in enumerate(vocab))
+            raw = f"map({pairs})[CAST({S.name(c)} AS STRING)]"
             if mode == "keep":
-                expr = F.coalesce(raw, F.lit(float(len(vocab))))
+                expr = f"coalesce({raw}, {S.double(len(vocab))})"
             elif mode == "skip":
-                df = df.filter(raw.isNotNull())
+                found.append(f"({raw} IS NOT NULL)")
                 expr = raw
             else:
-                expr = F.when(raw.isNull(),
-                              F.raise_error(F.lit(f"StringIndexer: unseen value in {c}"))
-                              .cast("double")).otherwise(raw)
-            df = df.withColumn(oc, expr)
-        return df
+                msg = S.string(f"StringIndexer: unseen value in {c}")
+                expr = (f"CASE WHEN {raw} IS NULL THEN CAST(raise_error({msg}) "
+                        f"AS DOUBLE) ELSE {raw} END")
+            outs[oc] = F.expr(expr)
+        if found:
+            df = df.filter(" AND ".join(found))
+        return df.withColumns(outs)
 
     def transform_local(self, pdf):
         out = pdf.copy()

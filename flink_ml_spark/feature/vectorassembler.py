@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType
 
 from ..api import Transformer
+from ..common import sqltext as S
 from ..param import (HasHandleInvalid, HasInputCols, HasOutputCol,
                      IntArrayParam)
 
@@ -25,37 +26,35 @@ class VectorAssembler(Transformer, HasInputCols, HasOutputCol, HasHandleInvalid)
         schema = {f.name: f.dataType for f in df.schema.fields}
 
         parts = []
-        invalid = F.lit(False)
+        invalid = "false"
         for c, size in zip(in_cols, sizes):
-            col = F.col(c)
+            col = S.name(c)
             if isinstance(schema[c], ArrayType):
-                arr = col.cast("array<double>")
-                bad = col.isNull()
+                arr = f"CAST({col} AS ARRAY<DOUBLE>)"
+                bad = f"{col} IS NULL"
                 if size:
-                    bad = bad | (F.size(col) != F.lit(size))
+                    bad = f"({bad} OR size({col}) != {int(size)})"
                 if mode == "keep":
-                    fill = F.array_repeat(F.lit(float("nan")), int(size or 1))
-                    arr = F.when(bad, fill).otherwise(arr)
+                    fill = f"array_repeat({S.double(float('nan'))}, {int(size or 1)})"
+                    arr = f"CASE WHEN {bad} THEN {fill} ELSE {arr} END"
             else:
-                x = col.cast("double")
-                bad = col.isNull() | F.isnan(x)
+                x = f"CAST({col} AS DOUBLE)"
+                bad = f"({col} IS NULL OR isnan({x}))"
                 if mode == "keep":
-                    arr = F.array(F.coalesce(x, F.lit(float("nan"))))
+                    arr = f"array(coalesce({x}, {S.double(float('nan'))}))"
                 else:
-                    arr = F.array(x)
+                    arr = f"array({x})"
             parts.append(arr)
-            invalid = invalid | bad
+            invalid = f"{invalid} OR {bad}"
 
-        out = F.concat(*parts) if len(parts) > 1 else parts[0]
+        out = f"concat({', '.join(parts)})" if len(parts) > 1 else parts[0]
         if mode == "skip":
-            df = df.filter(~invalid)
+            df = df.filter(f"NOT ({invalid})")
         elif mode == "error":
-            out = F.when(
-                invalid,
-                F.raise_error(F.lit("VectorAssembler: invalid (null/NaN/size-mismatch) input"))
-                .cast("array<double>")
-            ).otherwise(out)
-        return df.withColumn(self.get_("outputCol"), out)
+            msg = S.string("VectorAssembler: invalid (null/NaN/size-mismatch) input")
+            out = (f"CASE WHEN {invalid} THEN CAST(raise_error({msg}) AS ARRAY<DOUBLE>) "
+                   f"ELSE {out} END")
+        return df.withColumns({self.get_("outputCol"): F.expr(out)})
 
     def transform_local(self, pdf):
         import math

@@ -12,10 +12,20 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..api import AlgoOperator, Estimator, Model, Transformer
-from ..common import vector as V
+from ..common import sqltext as S, vector as V
 from ..param import (FloatParam, HasDistanceMeasure, HasInputCol,
                      HasOutputCol, HasSeed, IntParam, ParamValidators,
                      StringParam)
+
+
+def _norm(v: str, dim: int | None, alias: str) -> Column:
+    """The 2-norm of array column ``v`` as ``alias``, one expression."""
+    return F.expr(f"sqrt({V.sq_norm_fixed(v, dim)}) AS {S.name(alias)}")
+
+
+def _cosine(a: str, b: str, na: str, nb: str, dim: int | None) -> Column:
+    """Cosine of array columns ``a``, ``b`` given their norm columns."""
+    return F.expr(f"{V.dot_fixed(a, b, dim)} / ({S.name(na)} * {S.name(nb)})")
 
 
 class BruteForceKNNJoin(AlgoOperator, HasSeed):
@@ -46,11 +56,11 @@ class BruteForceKNNJoin(AlgoOperator, HasSeed):
         # cast per term, overflowing janino's method limit (codegen then
         # silently falls back to interpreted, worse than the HOF)
         q = queries.select(F.col(qid), qv.alias("qv")).select(
-            qid, "qv", F.sqrt(V.sq_norm_fixed(F.col("qv"), dim)).alias("__qn__"))
+            qid, "qv", _norm("qv", dim, "__qn__"))
         c = corpus.select(F.col(cid), qv.alias("cv")).select(
-            cid, "cv", F.sqrt(V.sq_norm_fixed(F.col("cv"), dim)).alias("__cn__"))
+            cid, "cv", _norm("cv", dim, "__cn__"))
         joined = c.crossJoin(F.broadcast(q))
-        cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn__") * F.col("__cn__"))
+        cos = _cosine("qv", "cv", "__qn__", "__cn__", dim)
         scored = joined.withColumn("cosine", cos)
         # the per-query candidate set is the whole corpus here; the
         # partial window-group limit keeps k per query per map partition
@@ -302,7 +312,7 @@ class IVFIndexModel(Model):
             F.explode(probe_cells).alias(cc),
             *[F.col(x) for x in carry_query_cols]
         ).select(query_id, "qv", cc,
-                 F.sqrt(V.sq_norm_fixed(F.col("qv"), dim)).alias("__qn__"),
+                 _norm("qv", dim, "__qn__"),
                  *[F.col(x) for x in carry_query_cols])
         from ..common.dataflow import top_k_per_key
         if codes_col is None:
@@ -311,7 +321,7 @@ class IVFIndexModel(Model):
                 F.col(corpus_id), F.col(cc), cv.alias("cv"),
                 *[F.col(x) for x in carry_corpus_cols]).select(
                 corpus_id, cc, "cv",
-                F.sqrt(V.sq_norm_fixed(F.col("cv"), dim)).alias("__cn__"),
+                _norm("cv", dim, "__cn__"),
                 *[F.col(x) for x in carry_corpus_cols])
             joined = c.join(F.broadcast(q), cc)
             if candidate_filter is not None:
@@ -319,7 +329,7 @@ class IVFIndexModel(Model):
                 # (post-rank filtering would under-fill k) and before any
                 # cosine arithmetic runs on the dropped candidates
                 joined = joined.filter(candidate_filter)
-            cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn__") * F.col("__cn__"))
+            cos = _cosine("qv", "cv", "__qn__", "__cn__", dim)
             return (top_k_per_key(joined.withColumn("cosine", cos), [query_id],
                                   [F.desc("cosine"), F.asc(corpus_id)], k,
                                   rank_col="rank")
@@ -335,8 +345,8 @@ class IVFIndexModel(Model):
         c = corpus_indexed.select(
             F.col(corpus_id), F.col(cc), dv.alias("__dv__")).select(
             corpus_id, cc, "__dv__",
-            F.sqrt(V.sq_norm_fixed(F.col("__dv__"), dim)).alias("__dn__"))
-        cos_q = V.dot_fixed("qv", "__dv__", dim) / (F.col("__qn__") * F.col("__dn__"))
+            _norm("__dv__", dim, "__dn__"))
+        cos_q = _cosine("qv", "__dv__", "__qn__", "__dn__", dim)
         scored = c.join(F.broadcast(q), cc).withColumn("cosine_q", cos_q)
         if rerank <= 0:
             return (top_k_per_key(scored, [query_id],
@@ -352,15 +362,13 @@ class IVFIndexModel(Model):
                  .join(queries.select(
                      F.col(query_id), v.alias("qv")).select(
                      query_id, "qv",
-                     F.sqrt(V.sq_norm_fixed(F.col("qv"), dim))
-                     .alias("__qn2__")), query_id)
+                     _norm("qv", dim, "__qn2__")), query_id)
                  .join(corpus_indexed.select(
                      F.col(corpus_id),
                      F.col(vc).cast("array<double>").alias("cv")).select(
                      corpus_id, "cv",
-                     F.sqrt(V.sq_norm_fixed(F.col("cv"), dim))
-                     .alias("__cn2__")), corpus_id))
-        cos = V.dot_fixed("qv", "cv", dim) / (F.col("__qn2__") * F.col("__cn2__"))
+                     _norm("cv", dim, "__cn2__")), corpus_id))
+        cos = _cosine("qv", "cv", "__qn2__", "__cn2__", dim)
         return (top_k_per_key(exact.withColumn("cosine", cos), [query_id],
                               [F.desc("cosine"), F.asc(corpus_id)], k,
                               rank_col="rank")
@@ -433,7 +441,7 @@ class EmbeddingCosineDeduplicator(AlgoOperator, HasSeed):
         # pair-side dot is the unrolled codegen form.  Summation order
         # matches the HOF fold, so cosine values are bit-identical to the
         # previous per-pair computation and oracle hashes don't move.
-        cos = V.dot_fixed("va", "vb", dim) / (F.col("__na__") * F.col("__nb__"))
+        cos = _cosine("va", "vb", "__na__", "__nb__", dim)
         return (pairs.withColumn("cosine", cos)
                 .filter(F.col("cosine") >= self.get_("threshold"))
                 .select("id_a", "id_b", "cosine"))
@@ -441,7 +449,7 @@ class EmbeddingCosineDeduplicator(AlgoOperator, HasSeed):
     @staticmethod
     def _with_norm(v: DataFrame, dim: int | None) -> DataFrame:
         return v.select("id", "v",
-                        F.sqrt(V.sq_norm_fixed(F.col("v"), dim)).alias("__n__"))
+                        _norm("v", dim, "__n__"))
 
     def transform(self, *inputs: DataFrame) -> list[DataFrame]:
         (df,) = inputs
@@ -631,7 +639,7 @@ class SemanticDeduplicator(AlgoOperator, HasSeed, HasDistanceMeasure):
         # summation — bit-identical values); dim from the fitted centroids
         dim = len(idx.model_data["centroids"][0])
         vn = v.select("id", "v",
-                      F.sqrt(V.sq_norm_fixed(F.col("v"), dim)).alias("__n__"))
+                      _norm("v", dim, "__n__"))
         pairs = (cand
                  .join(vn.select(F.col("id").alias("id_a"),
                                  F.col("v").alias("va"),
@@ -639,7 +647,7 @@ class SemanticDeduplicator(AlgoOperator, HasSeed, HasDistanceMeasure):
                  .join(vn.select(F.col("id").alias("id_b"),
                                  F.col("v").alias("vb"),
                                  F.col("__n__").alias("__nb__")), "id_b"))
-        cos = V.dot_fixed("va", "vb", dim) / (F.col("__na__") * F.col("__nb__"))
+        cos = _cosine("va", "vb", "__na__", "__nb__", dim)
         return [pairs.withColumn("cosine", cos)
                 .filter(F.col("cosine") >= self.get_("threshold"))
                 .select("id_a", "id_b", "cell", "cosine")]

@@ -29,6 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common import sqltext as S
 from ..common.optimizer import dot_lit
 from ..param import (FloatParam, HasDecayFactor, HasFeaturesCol,
                      HasGlobalBatchSize, HasLabelCol, HasMaxAllowedModelDelayMs,
@@ -373,7 +374,7 @@ class OnlineLogisticRegression(Estimator, HasFeaturesCol, HasLabelCol,
             self._z = np.zeros(dim)
             self._n = np.zeros(dim)
         w = self.weights()
-        margin = dot_lit(F.col(fcol), w)
+        margin = F.expr(dot_lit(S.name(fcol), w))
         resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)) - F.col(lcol).cast("double")
         rows = (batch_df.select(resid.alias("r"), F.posexplode(F.col(fcol)).alias("pos", "x"))
                 .groupBy("pos")

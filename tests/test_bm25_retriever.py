@@ -1,6 +1,7 @@
 """Bm25Retriever vs hand-computed BM25 and vs Bm25Scorer parity."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,24 @@ def test_retriever_parity_with_scorer(spark, corpus):
     assert set(got) == set(truth)
     for d in truth:
         assert got[d] == pytest.approx(truth[d], abs=1e-12)
+
+
+def test_retriever_transform_is_lazy_and_has_no_nested_loop_join(
+        spark, corpus, jobs_of):
+    """transform() launches no job: (N, avgdl) fold into the query as one
+    scalar subquery of a struct, run once and reused for both fields,
+    not as a cross join of a one-row relation (a nested-loop join)."""
+    qs = spark.createDataFrame([(1, "apple cherry")],
+                               "query_id bigint, query_text string")
+    out, jobs = jobs_of("bm25_transform",
+                        lambda: Bm25Retriever(k=10).transform(corpus, qs)[0])
+    assert jobs == []
+    out.collect()
+    plan = (out._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert "NestedLoopJoin" not in plan
+    assert len(set(re.findall(r"(?<!Reused)Subquery subquery#(\d+)", plan))) == 1
+    assert "ReusedSubquery" in plan
 
 
 def test_retriever_max_doc_freq(spark, corpus):

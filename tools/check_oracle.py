@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -58,10 +59,15 @@ def main():
         else "/root/testdata/sf0.01"
     only = set(a for a in sys.argv[1:] if not os.path.isdir(a))
 
-    from flink_ml_spark.benchmark.session import session
+    from flink_ml_spark.benchmark.session import meminfo_mib, session
     spark = session("check_oracle", cpus=8, partitions=16)
 
-    con = duckdb.connect()
+    # DuckDB runs inside this process: before each oracle its memory is
+    # capped at a quarter of what is available then, past which it
+    # spills to a temporary directory (under $TMPDIR); uncapped, the
+    # minhash_lsh_join oracle at sf0.1 grew this process past 11 GB
+    spill = tempfile.TemporaryDirectory(prefix="check_oracle_duckdb_")
+    con = duckdb.connect(config={"temp_directory": spill.name})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
@@ -121,6 +127,8 @@ def main():
                       "the driver gate hash-rejects HUGEINT cells")
                 n_fail += 1
                 continue
+            con.execute(f"SET memory_limit = "
+                        f"'{max(256, meminfo_mib()['MemAvailable'] // 4)}MB'")
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
@@ -152,6 +160,8 @@ def main():
             print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    con.close()
+    spill.cleanup()
     sys.exit(1 if n_fail else 0)
 
 
